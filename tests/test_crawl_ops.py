@@ -527,6 +527,68 @@ def test_robots_parse_to_table_matches_literal_gate(spark):
     assert via_parse == via_literal and via_parse
 
 
+def test_robots_table_null_rule_fields_match_sql_form(spark):
+    """NULL rule fields degrade as in the SQL form the verdict UDF
+    replaced (filter on the rule match, max of (len, allow) structs,
+    coalesce(allow, true)): a NULL prefix never matches; a NULL allow
+    matches with its length, loses a length tie to a non-NULL allow,
+    and allows when it wins."""
+    from xeloader_spark.operators.robots import (
+        SPARK_D,
+        robots_filter_table,
+        rule_match_sql,
+    )
+
+    rules_df = spark.createDataFrame(
+        [
+            ("a.com", None, False),
+            ("a.com", "/p", False),
+            ("b.com", "/ab", None),
+            ("c.com", "/ab", None),
+            ("c.com", "/ab", False),
+            ("d.com", "/abc", None),
+            ("d.com", "/ab", False),
+        ],
+        "host string, prefix string, allow boolean",
+    )
+    urls = ["http://a.com/private", "http://a.com/zzz", "http://b.com/abc",
+            "http://c.com/abc", "http://d.com/abcd", "http://d.com/abx"]
+    docs = spark.createDataFrame([(u,) for u in urls], "url string")
+    out = robots_filter_table(docs, rules_df)
+    got = {r.url: (r.matched_len, r.allowed) for r in out.collect()}
+    assert got == {
+        "http://a.com/private": (2, False),
+        "http://a.com/zzz": (-1, True),
+        "http://b.com/abc": (3, True),
+        "http://c.com/abc": (3, False),
+        "http://d.com/abcd": (4, True),
+        "http://d.com/abx": (3, False),
+    }
+
+    host_rules = rules_df.groupBy("host").agg(
+        F.expr(
+            "collect_list(named_struct('prefix', prefix, 'allow', allow))"
+        ).alias("_rules")
+    )
+    best = (
+        "try_element_at(reverse(array_sort(transform(filter(_rules, r -> "
+        + rule_match_sql(SPARK_D, "path", "r.prefix")
+        + "), r -> named_struct('len', length(r.prefix), "
+        "'allow', r.allow)))), 1)"
+    )
+    sql_form = (
+        out.select("url", "host", "path")
+        .join(host_rules, "host", "left")
+        .select("url", F.expr(best).alias("b"))
+        .select(
+            "url",
+            F.expr("CAST(coalesce(b.len, -1) AS BIGINT)"),
+            F.expr("coalesce(b.allow, true)"),
+        )
+    )
+    assert {u: (n, a) for u, n, a in sql_form.collect()} == got
+
+
 def test_robots_crawl_delay_closed_form(spark):
     """Closed-form expectation (NOT a replay — catches bugs a
     replay-identical oracle would mirror): decoy group's 99 never

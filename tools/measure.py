@@ -1,10 +1,10 @@
 #!/usr/bin/env python
-"""Round-13 optimization measurement harness.
+"""Optimization measurement harness: plan captures and isolated timings.
 
 Usage:
-  python tools/r13_measure.py plan  <suffix> q1 q2 ...   # capture explain("formatted") → plans/r13/<q>_<suffix>.txt
-  python tools/r13_measure.py time  <repeats> q1 q2 ...  # isolated noop-sink timings (min of N), labelled jobs
-  python tools/r13_measure.py both  <suffix> q1 q2 ...   # plan + 2-repeat timing
+  python tools/measure.py plan  <suffix> q1 q2 ...   # capture explain("formatted") → plans/r14/<q>_<suffix>.txt
+  python tools/measure.py time  <repeats> q1 q2 ...  # isolated noop-sink timings (min of N), labelled jobs
+  python tools/measure.py both  <suffix> q1 q2 ...   # plan + 2-repeat timing
 
 Timings use the same methodology as bench.py (noop sink, warm session,
 release_persisted between runs) at $SPARK_GRAFT_SF_DIR (default sf0.1).
@@ -24,8 +24,9 @@ from xeloader_spark.operators.dedup import release_persisted
 from xeloader_spark.plans.inspect import count_exchanges, physical_plan
 from xeloader_spark.session import get_spark
 
+# where `plan` writes its captures (the current round's plans directory)
 PLANS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
 )
 
 
@@ -41,7 +42,7 @@ def main() -> None:
         names = sys.argv[3:]
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="r13-measure")
+    spark = get_spark(app_name="measure")
     spark.sparkContext.setLogLevel("ERROR")
     registry = q.all_queries()
 
@@ -68,7 +69,7 @@ def main() -> None:
         if mode in ("time", "both"):
             ts = []
             for _ in range(repeats):
-                spark.sparkContext.setJobDescription(f"r13: {name}")
+                spark.sparkContext.setJobDescription(f"measure: {name}")
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
@@ -79,7 +80,7 @@ def main() -> None:
             row["times"] = ts
             row["min"] = min(ts)
         out[name] = row
-        print(f"[r13] {name}: {row}", file=sys.stderr, flush=True)
+        print(f"[measure] {name}: {row}", file=sys.stderr, flush=True)
     print(json.dumps(out, indent=1))
     spark.stop()
 

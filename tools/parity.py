@@ -2,7 +2,7 @@
 """Spot parity check for touched queries: run each named query against
 its DuckDB oracle at sf0.01 (the driver's exact compare path).
 
-Usage: python tools/r14_parity.py q1 q2 ...
+Usage: python tools/parity.py q1 q2 ...
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_DIR", "/root/testdata/sf0.01")
 
 def main() -> None:
     names = sys.argv[1:]
-    spark = get_spark(app_name="r14-parity")
+    spark = get_spark(app_name="parity")
     spark.sparkContext.setLogLevel("ERROR")
     registry = q.all_queries()
     oracles = q.all_oracles()

@@ -221,7 +221,7 @@ def score_projection(
     import numpy as np
     import pyarrow as pa
 
-    from .text import _tok_array
+    from .kernels import list_flat
 
     labels = [label for label, _ in packed_model]
     W = np.array(
@@ -253,20 +253,7 @@ def score_projection(
     def batches(it):
         for b in it:
             cols = [b.column(f.name) for f in pass_fields]
-            if b.num_rows == 0:
-                cols += [pa.array([], pa.string()), pa.array([], pa.int64())]
-                yield pa.record_batch(cols, names=names)
-                continue
-            bks = b.column("_bks")
-            if isinstance(bks, pa.ChunkedArray):  # pragma: no cover
-                bks = bks.combine_chunks()
-            offsets = bks.offsets.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            flat = bks.values.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )[offsets[0] : offsets[-1]]
-            offsets = offsets - offsets[0]
+            offsets, flat = list_flat(b.column("_bks"))
             n = b.num_rows
             row_ids = np.repeat(np.arange(n, dtype=np.int64), np.diff(offsets))
             counts = np.bincount(

@@ -39,9 +39,10 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .kernels import int_matrix, quantize_sql
 from .similarity import _dot_sql as _sim_dot_sql
 from .similarity import _sq_dist_sql as _sim_sq_dist_sql
 
@@ -102,23 +103,6 @@ def _dist_sql(centroid: list[int], arr_sql: str) -> str:
     )
 
 
-def _argmin_struct_sql(centroids: list[list[int]], arr_sql: str) -> str:
-    """least() over named (dist, code) structs — the argmin-by-distance
-    with code-index tie-break, identical ordering to the F.least/F.struct
-    form, built as one string for one Py4J call."""
-    structs = [
-        f"named_struct('d', {_dist_sql(c, arr_sql)}, 'c', CAST({j} AS INT))"
-        for j, c in enumerate(centroids)
-    ]
-    if len(structs) == 1:  # least() requires >1 args
-        return structs[0]
-    return f"least({','.join(structs)})"
-
-
-def _dist_to(centroid: list[int]) -> Column:
-    return F.expr(_dist_sql(centroid, "qarr"))
-
-
 def _np_argmin_dist(qm, C):
     """(cluster idx int32, dist int64) of each row of `qm` (n × dim
     int64) against centroid matrix `C` (k × dim int64) — exact integer
@@ -137,15 +121,6 @@ def _np_argmin_dist(qm, C):
     return cl.astype("int32"), d[np.arange(n), cl]
 
 
-def _batch_qarr_matrix(batch):
-    """The qarr column of an Arrow batch as an n × dim int64 matrix."""
-    import numpy as np
-
-    return np.stack(
-        batch.column("qarr").to_numpy(zero_copy_only=False)
-    ).astype(np.int64)
-
-
 def _assign(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Add (cluster, dist): argmin over the k literal centroids with the
     (dist, code) struct-least tie-break — zero joins, zero shuffles.
@@ -159,7 +134,8 @@ def _assign(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     struct-least (d, c) tie-break; equality pinned in pytest). A flat
     subscripted-SQL variant was also tried and measured 5× WORSE
     (optimizer/codegen cost on the huge literal tree). The hot columns
-    only (id, qarr) cross the Arrow boundary."""
+    only (id, qarr) cross the Arrow boundary. An invalid vector
+    (`kernels.int_matrix`) keeps its row with NULL cluster and dist."""
     import numpy as np
     import pyarrow as pa
 
@@ -167,24 +143,14 @@ def _assign(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
 
     def batches(it):
         for b in it:
-            if b.num_rows == 0:
-                yield pa.record_batch(
-                    [
-                        b.column("id"),
-                        b.column("qarr"),
-                        pa.array([], pa.int32()),
-                        pa.array([], pa.int64()),
-                    ],
-                    names=["id", "qarr", "cluster", "dist"],
-                )
-                continue
-            cl, dist = _np_argmin_dist(_batch_qarr_matrix(b), C)
+            qm, valid = int_matrix(b.column("qarr"), C.shape[1])
+            cl, dist = _np_argmin_dist(qm, C)
             yield pa.record_batch(
                 [
                     b.column("id"),
                     b.column("qarr"),
-                    pa.array(cl, pa.int32()),
-                    pa.array(dist, pa.int64()),
+                    pa.array(cl, pa.int32(), mask=~valid),
+                    pa.array(dist, pa.int64(), mask=~valid),
                 ],
                 names=["id", "qarr", "cluster", "dist"],
             )
@@ -226,7 +192,8 @@ def _encode_codes(
     tie-break). `with_cluster` passes an existing int `cluster` column
     through (the IVFPQ list-build encodes AFTER the probed-cluster
     filter, so encode cost tracks the probed fraction, not the
-    corpus)."""
+    corpus). An invalid vector (`kernels.int_matrix`) keeps its row with
+    NULL codes."""
     import pyarrow as pa
 
     m = len(codebooks)
@@ -244,11 +211,9 @@ def _encode_codes(
             cols = [b.column("id")]
             if with_cluster:
                 cols.append(b.column("cluster"))
-            if b.num_rows == 0:
-                cols += [pa.array([], pa.int32()) for _ in range(m)]
-            else:
-                codes = _np_codes(_batch_qarr_matrix(b), codebooks, sub)
-                cols += [pa.array(c, pa.int32()) for c in codes]
+            qm, valid = int_matrix(b.column("qarr"), m * sub)
+            codes = _np_codes(qm, codebooks, sub)
+            cols += [pa.array(c, pa.int32(), mask=~valid) for c in codes]
             if with_qarr:
                 cols.append(b.column("qarr"))
             yield pa.record_batch(cols, names=names)
@@ -488,12 +453,6 @@ def _exact_case_sql(query_ids: list[int], qrows: dict[int, list[int]]) -> str:
     return f"CASE {whens} END"
 
 
-def _dist_expr(centroid: list[int], arr_sql: str) -> Column:
-    """Squared-L2 to a literal centroid over the array named by
-    `arr_sql` (see `_dist_sql` for why this is string-built)."""
-    return F.expr(_dist_sql(centroid, arr_sql))
-
-
 def semantic_dedup(
     emb_df: DataFrame,
     k: int = K,
@@ -525,10 +484,7 @@ def semantic_dedup(
     # unshifted quantized vectors for the dot (signs matter)
     qd = emb_df.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            f"transform({vec_col}, v -> "
-            f"CAST(round(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
-        ).alias("qdarr"),
+        F.expr(quantize_sql(vec_col, scale)).alias("qdarr"),
     )
     m = members.join(qd, "id")
     a = m.alias("a")

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.truncate import round_truncate
+from .kernels import quantize_sql
 
 TOKEN_SPLIT_RE = r"\s+"  # for the F.split python API
 TOKEN_SPLIT_RE_SQL = r"\\s+"  # for patterns embedded in F.expr SQL literals
@@ -50,8 +51,10 @@ def release_persisted() -> int:
     """Unpersist every intermediate persisted by this module's pipelines
     (and by operators/rank, which this module's SSJoin uses), plus every
     registered localCheckpoint block (plans.truncate registry, r14);
-    returns how many were released. Safe to call at any time — Spark
-    unpersist is lazy-tolerant (no-op for already-freed blocks)."""
+    returns how many were released. Call it only once every frame built
+    on them is finished with: unpersist is a no-op for already-freed
+    blocks, but a frame local-checkpointed before the call reads blocks
+    that are then gone, and a local checkpoint cannot be recomputed."""
     from xeloader_spark.operators import rank as _rank
     from xeloader_spark.plans.truncate import release_checkpoints
 
@@ -1207,9 +1210,7 @@ def embedding_neardup(
 
     q = emb_df.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            f"transform({vec_col}, v -> CAST(round(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
-        ).alias("qarr"),
+        F.expr(quantize_sql(vec_col, scale)).alias("qarr"),
     ).withColumn("nrm", F.expr(sim._sq_norm_sql("qarr")))
     # The corpus side arrives as one partition (small parquet) — without a
     # repartition the broadcast-NL join's whole O(n²) pair space runs in a

@@ -369,6 +369,11 @@ def robots_filter(
     )
 
 
+# SQL struct order of a rule's `allow` (NULL < false < true), the
+# tie-break of the longest-match pick
+_ALLOW_RANK = {None: 0, False: 1, True: 2}
+
+
 def robots_filter_table(
     df: DataFrame,
     rules_df: DataFrame,
@@ -414,29 +419,28 @@ def robots_filter_table(
     # mention). Here the rules arrive as DATA (array<struct> per host),
     # so the per-row match sorts the host's few rules by (len, allow)
     # DESC and takes the first match — identical to the max-struct
-    # pick, with the same no-rules → allowed default. Non-deterministic
-    # mark stops optimizer duplication (§4.4). Values pinned by the
-    # literal-vs-table parity test and the oracle replays.
+    # pick, with the same no-rules → allowed default. NULL rule fields
+    # follow the SQL form too: a NULL prefix never matches (the match
+    # predicate is NULL), a NULL allow sorts below false and true (struct
+    # ordering puts NULL first) and allows when it wins (coalesce).
+    # Non-deterministic mark stops optimizer duplication (§4.4). Values
+    # pinned by the literal-vs-table parity test and the oracle replays.
     @F.pandas_udf("matched_len long, allowed boolean")
     def _verdict(path: pd.Series, rules: pd.Series) -> pd.DataFrame:
         lens, allows = [], []
         for p, rl in zip(path.values, rules.values):
-            if p is None or rl is None or len(rl) == 0:
-                lens.append(-1)
-                allows.append(True)
-                continue
             best = (-1, True)
-            found = False
-            for r in sorted(
-                rl,
-                key=lambda r: (len(r["prefix"]), bool(r["allow"])),
-                reverse=True,
-            ):
-                if _match_py(p, r["prefix"]):
-                    best = (len(r["prefix"]), bool(r["allow"]))
-                    found = True
-                    break
-            lens.append(best[0] if found else -1)
+            if p is not None and rl is not None:
+                for r in sorted(
+                    (r for r in rl if r["prefix"] is not None),
+                    key=lambda r: (len(r["prefix"]), _ALLOW_RANK[r["allow"]]),
+                    reverse=True,
+                ):
+                    if _match_py(p, r["prefix"]):
+                        allow = r["allow"] is None or bool(r["allow"])
+                        best = (len(r["prefix"]), allow)
+                        break
+            lens.append(best[0])
             allows.append(best[1])
         return pd.DataFrame({"matched_len": lens, "allowed": allows})
 

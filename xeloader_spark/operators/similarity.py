@@ -23,20 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..plans.truncate import registered_local_checkpoint
-
-
-def explode_quantized(
-    emb_df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
-    """(id, pos, qv): integer-quantized components."""
-    return (
-        emb_df.select(F.col(id_col).alias("id"), F.posexplode(vec_col).alias("pos", "v"))
-        .withColumn("qv", F.round(F.col("v").cast("double") * scale).cast("long"))
-        .drop("v")
-    )
+from .kernels import int_matrix, quantize_sql
 
 
 def dot_topk_quantized(
@@ -62,47 +49,38 @@ def dot_topk_quantized(
     the fold form and the SQL oracle replay. Only the corpus's (id,
     qarr) columns cross the Arrow boundary ONCE — contrast the k-NN
     band join, where the same treatment measured SLOWER because the
-    join fan-out (pairs × two arrays) would cross instead."""
+    join fan-out (pairs × two arrays) would cross instead.
+
+    A NULL or wrong-width vector (see `kernels.int_matrix`) is never
+    paired: as a candidate it yields no row, as a query no rows."""
     import numpy as np
     import pyarrow as pa
 
     q = emb_df.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            f"transform({vec_col}, v -> CAST(round(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
-        ).alias("qarr"),
+        F.expr(quantize_sql(vec_col, scale)).alias("qarr"),
     )
-    qrows = q.filter(F.col("id").isin(query_ids)).collect()
+    dim = _vec_dim(emb_df, vec_col) or 0
+    qrows = [
+        r
+        for r in q.filter(F.col("id").isin(query_ids)).collect()
+        if r.qarr is not None and len(r.qarr) == dim and None not in r.qarr
+    ]
     qids = np.asarray([r.id for r in qrows], dtype=np.int64)
-    QM = (
-        np.asarray([list(r.qarr) for r in qrows], dtype=np.int64)
-        if qrows
-        else np.zeros((0, 1), dtype=np.int64)
+    QM = np.asarray([r.qarr for r in qrows], dtype=np.int64).reshape(
+        len(qrows), dim
     )
 
     def batches(it):
         for b in it:
-            n = b.num_rows
-            if n == 0 or len(qids) == 0:
-                yield pa.record_batch(
-                    [
-                        pa.array([], pa.int64()),
-                        pa.array([], pa.int64()),
-                        pa.array([], pa.int64()),
-                    ],
-                    names=["query_id", "candidate_id", "dot"],
-                )
-                continue
-            cm = np.stack(
-                b.column("qarr").to_numpy(zero_copy_only=False)
-            ).astype(np.int64)
+            cm, valid = int_matrix(b.column("qarr"), dim)
             cids = b.column("id").to_numpy(zero_copy_only=False).astype(
                 np.int64
             )
             dots = cm @ QM.T  # (n, nq) exact int64
             cand = np.repeat(cids, len(qids))
-            quer = np.tile(qids, n)
-            keep = cand != quer
+            quer = np.tile(qids, len(cids))
+            keep = (cand != quer) & np.repeat(valid, len(qids))
             yield pa.record_batch(
                 [
                     pa.array(quer[keep]),
@@ -314,10 +292,10 @@ def _plane_signs(p: int, seed: int, dim: int) -> list[int]:
 
 
 def _vec_dim(emb_df: DataFrame, vec_col: str) -> int | None:
-    """Embedding width from the first row (None on an empty frame —
-    callers then fall back to the dimension-agnostic CASE expression)."""
-    row = emb_df.select(vec_col).first()
-    return len(row[0]) if row is not None and row[0] is not None else None
+    """Embedding width from the first non-NULL row (None when there is
+    none). Rows of any other width are invalid input to the kernels."""
+    row = emb_df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+    return None if row is None else len(row[0])
 
 
 def _dot_sql(a: str, b: str, dim: int | None = None) -> str:
@@ -371,24 +349,64 @@ def _signed_sum_sql(arr: str, signs: list[int]) -> str:
     return " ".join(parts)
 
 
-def _plane_proj_expr(p: int, seed: int, dim: int | None):
-    """Integer projection of `qarr` onto plane `p`: literal-sign-array
-    fast path when the width is known, md5-CASE fallback otherwise.
-    (The expanded signed-sum form is measured-negative HERE — the
-    n_planes projections nest inside ONE signature expression and the
-    generated method blows the codegen size limits, 1.7–10× slower;
-    see `_dot_sql`. It wins only where each projection is its own
-    output column — `random_project_quantized`.)"""
-    if dim is not None:
-        signs = ",".join(str(s) for s in _plane_signs(p, seed, dim))
-        return F.expr(
-            f"aggregate(zip_with(qarr, array({signs}), (v, s) -> v * s), "
-            "0L, (s, x) -> s + x)"
-        )
-    sign = _plane_sign_case(p, seed, "d", "instr")
-    return F.expr(
-        "aggregate(zip_with(qarr, sequence(0, size(qarr) - 1), "
-        f"(v, d) -> v * {sign}), 0L, (s, x) -> s + x)"
+def _band_sigs(
+    emb_df: DataFrame,
+    bands: int,
+    planes_per_band: int,
+    id_col: str,
+    vec_col: str,
+    scale: int,
+    seed: int,
+    dim: int | None,
+) -> DataFrame:
+    """(id, qarr, bsigs): the quantized vector and its `bands`
+    planes_per_band-bit quantized-hyperplane signatures; plane p of band
+    b is GLOBAL plane b·planes_per_band + p. `bsigs` is NULL for an
+    invalid vector (`kernels.int_matrix`). `dim` None probes the width.
+
+    r14 (guide §4.2, the PQ-kernel pattern): one numpy int64 matmul per
+    Arrow batch computes the whole (rows × planes) projection block —
+    the interpreted `aggregate(zip_with(...))` fold per plane per row
+    (CodegenFallback) dominated every LSH consumer's scan. Signs come
+    from the md5-precomputed `_plane_signs`, arithmetic stays int64 and
+    the `proj >= 0` bit-packing is the SQL form's, so signatures are
+    bit-identical (exceptAll = 0 both directions at sf0.01/sf0.1).
+    Interleaved A/B at sf0.1: 8×4 bands 1.11 → 0.40 s, 16×4 1.73 →
+    0.33 s. Only (id, qarr) crosses the boundary; qarr rides back out
+    untouched for the dot re-rank."""
+    import numpy as np
+    import pyarrow as pa
+
+    q = emb_df.select(
+        F.col(id_col).alias("id"),
+        F.expr(quantize_sql(vec_col, scale)).alias("qarr"),
+    )
+    if dim is None:
+        dim = _vec_dim(emb_df, vec_col) or 0
+    S = np.array(
+        [_plane_signs(p, seed, dim) for p in range(bands * planes_per_band)],
+        dtype=np.int64,
+    ).T.copy()  # (dim × planes), contiguous for the matmul
+    weights = 1 << np.arange(planes_per_band, dtype=np.int64)
+
+    def batches(it):
+        for b in it:
+            qm, valid = int_matrix(b.column("qarr"), dim)
+            n = len(valid)
+            bits = (qm @ S >= 0).astype(np.int64)  # int64-exact projection
+            bsig = (bits.reshape(n, bands, planes_per_band) * weights).sum(2)
+            lst = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n + 1) * bands, bands, dtype=np.int32)),
+                pa.array(bsig.reshape(-1), pa.int64()),
+                mask=pa.array(~valid),
+            )
+            yield pa.record_batch(
+                [b.column("id"), b.column("qarr"), lst],
+                names=["id", "qarr", "bsigs"],
+            )
+
+    return q.mapInArrow(
+        batches, schema="id long, qarr array<bigint>, bsigs array<bigint>"
     )
 
 
@@ -402,57 +420,13 @@ def quantized_hyperplane_signature(
     dim: int | None = None,
 ) -> DataFrame:
     """(id, qarr, sig): integer-quantized vector + n_planes-bit hyperplane
-    signature, all JVM-side. `qarr` is materialized in its own projection
-    before the per-plane projections reference it. Callers that already
-    know the embedding width pass `dim` to skip the first-row probe."""
-    import numpy as np
-    import pyarrow as pa
-
-    q = emb_df.select(
-        F.col(id_col).alias("id"),
-        F.expr(
-            f"transform({vec_col}, v -> CAST(round(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
-        ).alias("qarr"),
-    )
-    if dim is None:
-        dim = _vec_dim(emb_df, vec_col)
-    # r14: one numpy int64 matmul per Arrow batch instead of n_planes
-    # interpreted fold projections per row — the banded builder's
-    # kernel with the bits packed into ONE signature (guide §4.2;
-    # bit-identical by the same argument, pinned by the single-bucket
-    # LSH oracle parity + recall rows).
-    S = np.array(
-        [_plane_signs(p, seed, dim) for p in range(n_planes)], dtype=np.int64
-    ).T.copy()
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-
-    def batches(it):
-        for b in it:
-            ids = b.column("id")
-            qa = b.column("qarr")
-            n = b.num_rows
-            if n == 0:
-                yield pa.record_batch(
-                    [ids, qa, pa.array([], pa.int64())],
-                    names=["id", "qarr", "sig"],
-                )
-                continue
-            if isinstance(qa, pa.ChunkedArray):  # pragma: no cover
-                qa = qa.combine_chunks()
-            offs = qa.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = qa.values.to_numpy(zero_copy_only=False).astype(np.int64)[
-                offs[0]: offs[-1]
-            ]
-            proj = flat.reshape(n, dim) @ S
-            sig = ((proj >= 0).astype(np.int64) * weights).sum(axis=1)
-            yield pa.record_batch(
-                [ids, qa, pa.array(sig, pa.int64())],
-                names=["id", "qarr", "sig"],
-            )
-
-    return q.mapInArrow(
-        batches, schema="id long, qarr array<bigint>, sig long"
-    )
+    signature — the banded kernel with one band of n_planes planes. An
+    invalid vector gets a NULL `sig`, so it never collides. Callers that
+    already know the embedding width pass `dim` to skip the first-row
+    probe."""
+    return _band_sigs(
+        emb_df, 1, n_planes, id_col, vec_col, scale, seed, dim
+    ).select("id", "qarr", F.col("bsigs")[0].alias("sig"))
 
 
 def quantized_sig_sql(
@@ -541,77 +515,13 @@ def banded_quantized_signatures(
     band's planes_per_band-bit quantized-hyperplane signature. Plane p of
     band b uses GLOBAL plane index b·planes_per_band + p, so every band
     hashes with independent hyperplanes. All integer arithmetic — the
-    signatures replay bit-for-bit in SQL. Callers that already know the
-    embedding width pass `dim` to skip the first-row probe."""
-    import numpy as np
-    import pyarrow as pa
-
-    q = emb_df.select(
-        F.col(id_col).alias("id"),
-        F.expr(
-            f"transform({vec_col}, v -> "
-            f"CAST(round(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
-        ).alias("qarr"),
+    signatures replay bit-for-bit in SQL. An invalid vector yields no
+    band rows. Callers that already know the embedding width pass `dim`
+    to skip the first-row probe."""
+    out = _band_sigs(
+        emb_df, bands, planes_per_band, id_col, vec_col, scale, seed, dim
     )
-    if dim is None:
-        dim = _vec_dim(emb_df, vec_col)
-
-    # r14 (guide §4.2, the PQ-kernel pattern): all bands·planes_per_band
-    # plane projections per row used to evaluate as interpreted
-    # `aggregate(zip_with(...))` folds (CodegenFallback) — 32–64 folds
-    # per vector dominated every banded-LSH consumer's scan. One numpy
-    # int64 matmul per Arrow batch computes the whole (rows × planes)
-    # projection block instead; signs come from the same
-    # md5-precomputed `_plane_signs`, all arithmetic stays int64, and
-    # `proj >= 0` bit-packing is unchanged, so signatures are
-    # bit-identical (exceptAll = 0 both directions at sf0.01/sf0.1 for
-    # 8×4 and 16×4). Interleaved A/B at sf0.1: 8×4 1.11 → 0.40 s
-    # (0.36×), 16×4 1.73 → 0.33 s (0.19×). Only (id, qarr) crosses the
-    # boundary and qarr rides back out untouched for the dot re-rank;
-    # band fan-out stays JVM-side (posexplode of the per-row bsig
-    # array). The md5-CASE fold fallback for unknown width is gone —
-    # `dim` is always resolved above, exactly like the PQ kernels.
-    n_planes = bands * planes_per_band
-    S = np.array(
-        [_plane_signs(p, seed, dim) for p in range(n_planes)], dtype=np.int64
-    ).T.copy()  # (dim × n_planes), contiguous for the matmul
-    weights = 1 << np.arange(planes_per_band, dtype=np.int64)
-
-    def batches(it):
-        for b in it:
-            ids = b.column("id")
-            qa = b.column("qarr")
-            n = b.num_rows
-            if n == 0:
-                yield pa.record_batch(
-                    [ids, qa, pa.array([], pa.list_(pa.int64()))],
-                    names=["id", "qarr", "bsigs"],
-                )
-                continue
-            if isinstance(qa, pa.ChunkedArray):  # pragma: no cover
-                qa = qa.combine_chunks()
-            offs = qa.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = qa.values.to_numpy(zero_copy_only=False).astype(np.int64)[
-                offs[0]: offs[-1]
-            ]
-            proj = flat.reshape(n, dim) @ S  # int64 exact
-            bits = (proj >= 0).astype(np.int64).reshape(
-                n, bands, planes_per_band
-            )
-            bsig = (bits * weights).sum(axis=2)
-            lst = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * bands, bands, dtype=np.int32)
-                ),
-                pa.array(bsig.reshape(-1), pa.int64()),
-            )
-            yield pa.record_batch(
-                [ids, qa, lst], names=["id", "qarr", "bsigs"]
-            )
-
-    out = q.mapInArrow(
-        batches, schema="id long, qarr array<bigint>, bsigs array<bigint>"
-    )
+    # band fan-out stays JVM-side (posexplode of the per-row bsigs array)
     return out.select(
         "id", "qarr", F.posexplode("bsigs").alias("band", "bsig")
     ).select(
@@ -769,10 +679,7 @@ def random_project_quantized(
     matrix on any node."""
     q = emb_df.select(
         F.col(id_col).alias("vec_id"),
-        F.expr(
-            f"transform({vec_col}, "
-            f"v -> CAST(round(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
-        ).alias("qarr"),
+        F.expr(quantize_sql(vec_col, scale)).alias("qarr"),
     )
     dim = _vec_dim(emb_df, vec_col)
     projs = []
@@ -928,9 +835,7 @@ def mmr_rerank(
     )
     q = emb_df.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            f"transform({vec_col}, v -> CAST(round(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
-        ).alias("qarr"),
+        F.expr(quantize_sql(vec_col, scale)).alias("qarr"),
     )
     cands = (
         rel.join(q, rel.candidate_id == q.id)
