@@ -165,11 +165,14 @@ def test_registered_checkpoints_release_blocks(spark):
     """r14 (VERDICT r13 #4): localCheckpoint blocks taken through the
     plans.truncate registry are freed by release_persisted() instead of
     waiting for JVM GC of the RDD — a long-lived session's storage no
-    longer grows across pipelines."""
-    from xeloader_spark.operators.dedup import release_persisted
+    longer grows across pipelines. A registered persist sits in the
+    same registry, so the one release frees both kinds."""
+    from pyspark import StorageLevel
+
     from xeloader_spark.plans.truncate import (
         registered_local_checkpoint,
-        release_checkpoints,
+        registered_persist,
+        release_persisted,
     )
 
     release_persisted()  # start from a clean registry
@@ -178,20 +181,43 @@ def test_registered_checkpoints_release_blocks(spark):
     df = registered_local_checkpoint(
         spark.range(100).selectExpr("id", "id * 2 AS v")
     )
+    cached = registered_persist(spark.range(50).selectExpr("id * 3 AS w"))
     assert df.count() == 100  # blocks materialized
-    assert jsc.getPersistentRDDs().size() == base + 1
-    assert release_checkpoints() == 1
+    assert cached.count() == 50
+    assert jsc.getPersistentRDDs().size() == base + 2
+    assert cached.storageLevel != StorageLevel.NONE
+    assert release_persisted() == 2
     assert jsc.getPersistentRDDs().size() == base
+    assert cached.storageLevel == StorageLevel.NONE
 
 
 def test_round_truncate_registers_for_release(spark):
     """round_truncate's local path routes through the same registry, so
     per-round frames of the iterative family release too."""
-    from xeloader_spark.plans.truncate import _CHECKPOINTED, release_checkpoints
+    from xeloader_spark.plans.truncate import _PERSISTED, release_persisted
 
-    release_checkpoints()
+    release_persisted()
     out = round_truncate(spark.range(7))
     assert out.count() == 7
-    assert len(_CHECKPOINTED) == 1
-    assert release_checkpoints() == 1
-    assert len(_CHECKPOINTED) == 0
+    assert len(_PERSISTED) == 1
+    assert release_persisted() == 1
+    assert len(_PERSISTED) == 0
+
+
+def test_query_build_keeps_registered_frames(spark, sf_dir):
+    """Building q_dedup_eval / q_snm_recall_eval frees only the frames
+    the build persisted itself: a frame another caller registered before
+    the build still reads its blocks afterwards (a session-wide release
+    mid-build made it fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+    from xeloader_spark.operators.dedup import release_persisted
+    from xeloader_spark.plans.truncate import registered_local_checkpoint
+    from xeloader_spark.queries.dedup import q_dedup_eval, q_snm_recall_eval
+
+    held = registered_local_checkpoint(spark.range(100))
+    assert held.count() == 100
+    try:
+        q_dedup_eval(spark, sf_dir).collect()
+        q_snm_recall_eval(spark, sf_dir).collect()
+        assert held.count() == 100
+    finally:
+        release_persisted()

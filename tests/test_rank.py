@@ -13,15 +13,12 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from xeloader_spark.operators.rank import (
-    global_ntile,
-    global_row_number,
-    release_persisted,
-)
+from xeloader_spark.operators.rank import global_ntile, global_row_number
 from xeloader_spark.plans.inspect import (
     assert_no_global_window,
     find_global_windows,
 )
+from xeloader_spark.plans.truncate import release_persisted
 
 
 def _frame(spark, n):

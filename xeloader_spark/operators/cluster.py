@@ -42,6 +42,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.truncate import release_persisted  # noqa: F401  (re-export)
 from .kernels import int_matrix, quantize_sql
 from .similarity import _dot_sql as _sim_dot_sql
 from .similarity import _sq_dist_sql as _sim_sq_dist_sql
@@ -53,16 +54,6 @@ SCALE = 1000
 # (queries/similarity.py) so the two sides can never silently disagree
 # on subspace slicing.
 EMB_DIM = 64
-
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> int:
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
 
 
 def _quantized(

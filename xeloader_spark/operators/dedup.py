@@ -25,45 +25,17 @@ text) add a document-frequency cap (`max_df`) to drop degenerate buckets.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.truncate import round_truncate
+from ..plans.truncate import registered_persist, round_truncate
+from ..plans.truncate import release_persisted  # noqa: F401  (re-export)
 from .kernels import quantize_sql
 
 TOKEN_SPLIT_RE = r"\s+"  # for the F.split python API
 TOKEN_SPLIT_RE_SQL = r"\\s+"  # for patterns embedded in F.expr SQL literals
-
-# Persisted intermediates registry: the pipelines below persist frames that
-# feed multiple joins; callers that own the session lifecycle (bench loops,
-# long-running services) call release_persisted() after materializing a
-# result so executor storage memory doesn't accumulate across pipelines.
-_PERSISTED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def release_persisted() -> int:
-    """Unpersist every intermediate persisted by this module's pipelines
-    (and by operators/rank, which this module's SSJoin uses), plus every
-    registered localCheckpoint block (plans.truncate registry, r14);
-    returns how many were released. Call it only once every frame built
-    on them is finished with: unpersist is a no-op for already-freed
-    blocks, but a frame local-checkpointed before the call reads blocks
-    that are then gone, and a local checkpoint cannot be recomputed."""
-    from xeloader_spark.operators import rank as _rank
-    from xeloader_spark.plans.truncate import release_checkpoints
-
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n + _rank.release_persisted() + release_checkpoints()
-
 
 def tokenize(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(id, ord, tok) — positional tokens, whitespace split, JVM-side."""
@@ -456,7 +428,7 @@ def jaccard_pairs(
     consistent (it IS the Jaccard of the capped shingle sets)."""
     if max_df is not None:
         shingle_df = cap_document_frequency(shingle_df, max_df)
-    shingle_df = _persist(shingle_df)
+    shingle_df = registered_persist(shingle_df)
     sizes = shingle_df.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a = shingle_df.alias("a")
     b = shingle_df.alias("b")
@@ -497,7 +469,7 @@ def containment_pairs(
     hot-shingle skew cap."""
     if max_df is not None:
         shingle_df = cap_document_frequency(shingle_df, max_df)
-    shingle_df = _persist(shingle_df)
+    shingle_df = registered_persist(shingle_df)
     sizes = shingle_df.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a = shingle_df.alias("a")
     b = shingle_df.alias("b")
@@ -657,9 +629,9 @@ def minhash_neardup(
     sh = shingles(df, n=n, text_col=text_col, id_col=id_col)
     if max_df is not None:
         sh = cap_document_frequency(sh, max_df)
-    sh = _persist(sh)
+    sh = registered_persist(sh)
     sh_tok = sh.withColumnRenamed("shingle", "tok")
-    sigs = _persist(minhash_signatures(sh_tok, k=k))
+    sigs = registered_persist(minhash_signatures(sh_tok, k=k))
     cands = lsh_candidate_pairs(sigs, bands=bands, rows=rows)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     common = (
@@ -756,7 +728,9 @@ def bloom_decontaminate(
             for j in ks
         ]
 
-    ev = _persist(shingles(eval_df, n=n, text_col=text_col, id_col=id_col))
+    ev = registered_persist(
+        shingles(eval_df, n=n, text_col=text_col, id_col=id_col)
+    )
     words = (
         ev.select(
             F.explode(
@@ -837,8 +811,7 @@ def _cc_star(
     form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    def ck(d: DataFrame) -> DataFrame:
-        return round_truncate(d, checkpoint_dir)
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir)
     E = (
         pairs_uv.filter(F.col("u") != F.col("v"))
         .distinct()
@@ -925,11 +898,10 @@ def connected_components(
     form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    def ck(d: DataFrame) -> DataFrame:
-        return round_truncate(d, checkpoint_dir)
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir)
     # The union reads `pairs` twice; persisting it first keeps the
     # (possibly expensive) upstream pair pipeline to a single execution.
-    pairs = _persist(pairs.select(id_a, id_b))
+    pairs = registered_persist(pairs.select(id_a, id_b))
     if pairs.count() <= local_threshold:
         rows = pairs.collect()
         parent: dict = {}
@@ -959,7 +931,7 @@ def connected_components(
             max_iter,
             checkpoint_dir=checkpoint_dir,
         )
-    edges = _persist(
+    edges = registered_persist(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .union(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
         .distinct()
@@ -1081,7 +1053,7 @@ def hamming_neardup(
     n_blocks = max_dist + 1
     block_bits = bits // n_blocks
     mask = (1 << block_bits) - 1
-    sig_df = _persist(sig_df)  # consumed once per block side
+    sig_df = registered_persist(sig_df)  # consumed once per block side
     block_exprs = ", ".join(
         f"{b}, (shiftrightunsigned(simhash, {b * block_bits}) & {mask})"
         for b in range(n_blocks)
@@ -1255,7 +1227,7 @@ def _embedding_neardup_blocked(
     sigs = sim.quantized_hyperplane_signature(
         emb_df, n_planes, id_col, vec_col, scale, seed, dim=dim
     ).withColumn("nrm", F.expr(sim._sq_norm_sql("qarr", dim)))
-    sigs = _persist(sigs)
+    sigs = registered_persist(sigs)
 
     band_pairs = ", ".join(
         f"{b}, CAST(shiftright(sig, {b * rows_per_band}) & {mask} AS BIGINT)"
@@ -1321,7 +1293,7 @@ def minhash_search(
     from pyspark.sql import Window
 
     sh = shingles(df, n=n, text_col=text_col, id_col=id_col)
-    sigs = _persist(
+    sigs = registered_persist(
         minhash_signatures(sh.withColumnRenamed("shingle", "tok"), k=k)
     )
     banded = sigs
@@ -1406,7 +1378,7 @@ def minhash_incremental(
     from pyspark.sql import functions as F
 
     sh = shingles(new_df, n=n, text_col=text_col, id_col=id_col)
-    new_sigs = _persist(
+    new_sigs = registered_persist(
         minhash_signatures(sh.withColumnRenamed("shingle", "tok"), k=k)
     )
 
@@ -1605,7 +1577,7 @@ def prefix_jaccard_pairs(
     (id_a, id_b, n_common, jaccard)."""
     items = item_df.select(id_col, item_col).distinct()
     dfc = items.groupBy(item_col).agg(F.count(F.lit(1)).alias("df"))
-    sets = _persist(
+    sets = registered_persist(
         items.join(dfc, item_col)
         .groupBy(id_col)
         .agg(
@@ -1802,7 +1774,7 @@ def sorted_neighborhood_pairs(
     # the rank consumer still reads only (id, _sk); the shingle arrays
     # stay out of every shuffle exactly as before (the audit's 38×
     # shuffle-bytes rule is about exchanges, which a cache read is not).
-    keyed = _persist(docs.select(
+    keyed = registered_persist(docs.select(
         F.col(id_col).alias("id"), F.expr(toks).alias("_toks")
     ).select(
         "id",

@@ -22,6 +22,8 @@ O(outdeg) micro-units of mass per node per round — quantization noise
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,7 +50,7 @@ def pagerank(
     irrelevant and keeps the iteration to one join + one aggregate).
 
     Scale shape: the edge list is the big object and it shuffles ONCE up
-    front (outdeg aggregate + join, then eager localCheckpoint so no
+    front (outdeg aggregate + join, then localCheckpoint so no
     round re-pays it). Each round then shuffles edge-sized (dst, contrib)
     pairs into a node-sized aggregate and left-joins node-sized frames —
     2 shuffles per round over data that never exceeds the edge count,
@@ -63,18 +65,7 @@ def pagerank(
     form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    def ck(d: DataFrame) -> DataFrame:
-        # r14: LAZY local truncation — the plan still collapses to a
-        # LogicalRDD per round (O(1) plan growth), but the rounds chain
-        # into one job instead of one blocking job per round; the
-        # per-round RDDs cache on first compute, so nothing re-runs.
-        # Values identical (deterministic integer rounds; A/B at sf0.1
-        # measured flat-to--7% across the family, never worse). The
-        # reliable path stays EAGER: a lazy reliable checkpoint would
-        # re-run the round's plan in the checkpoint-write job.
-        return round_truncate(
-            d, checkpoint_dir, eager=checkpoint_dir is not None
-        )
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
     # materialize the edge list ONCE — nodes, outdegrees, and every
     # iteration all derive from this checkpoint, so an expensive edge
     # producer (e.g. the banded-LSH k-NN self-join) runs a single time
@@ -165,18 +156,7 @@ def hits(
     if iters < 1:
         raise ValueError("hits: iters must be >= 1")
 
-    def ck(d: DataFrame) -> DataFrame:
-        # r14: LAZY local truncation — the plan still collapses to a
-        # LogicalRDD per round (O(1) plan growth), but the rounds chain
-        # into one job instead of one blocking job per round; the
-        # per-round RDDs cache on first compute, so nothing re-runs.
-        # Values identical (deterministic integer rounds; A/B at sf0.1
-        # measured flat-to--7% across the family, never worse). The
-        # reliable path stays EAGER: a lazy reliable checkpoint would
-        # re-run the round's plan in the checkpoint-write job.
-        return round_truncate(
-            d, checkpoint_dir, eager=checkpoint_dir is not None
-        )
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
 
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -383,18 +363,7 @@ def label_propagation(
     form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    def ck(d: DataFrame) -> DataFrame:
-        # r14: LAZY local truncation — the plan still collapses to a
-        # LogicalRDD per round (O(1) plan growth), but the rounds chain
-        # into one job instead of one blocking job per round; the
-        # per-round RDDs cache on first compute, so nothing re-runs.
-        # Values identical (deterministic integer rounds; A/B at sf0.1
-        # measured flat-to--7% across the family, never worse). The
-        # reliable path stays EAGER: a lazy reliable checkpoint would
-        # re-run the round's plan in the checkpoint-write job.
-        return round_truncate(
-            d, checkpoint_dir, eager=checkpoint_dir is not None
-        )
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
     labels = seeds.select(
         "id", "label", F.lit(0).cast("long").alias("round_assigned")
     ).transform(ck)
@@ -464,18 +433,7 @@ def pagerank_weighted(
     form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    def ck(d: DataFrame) -> DataFrame:
-        # r14: LAZY local truncation — the plan still collapses to a
-        # LogicalRDD per round (O(1) plan growth), but the rounds chain
-        # into one job instead of one blocking job per round; the
-        # per-round RDDs cache on first compute, so nothing re-runs.
-        # Values identical (deterministic integer rounds; A/B at sf0.1
-        # measured flat-to--7% across the family, never worse). The
-        # reliable path stays EAGER: a lazy reliable checkpoint would
-        # re-run the round's plan in the checkpoint-write job.
-        return round_truncate(
-            d, checkpoint_dir, eager=checkpoint_dir is not None
-        )
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
     # materialize the edge list ONCE (same discipline as `pagerank` and
     # `hits`; r13): without this checkpoint the node-set action and the
     # weight-normalization action each re-derived the edge PRODUCER —
@@ -589,18 +547,7 @@ def kcore(
     form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    def ck(d: DataFrame) -> DataFrame:
-        # r14: LAZY local truncation — the plan still collapses to a
-        # LogicalRDD per round (O(1) plan growth), but the rounds chain
-        # into one job instead of one blocking job per round; the
-        # per-round RDDs cache on first compute, so nothing re-runs.
-        # Values identical (deterministic integer rounds; A/B at sf0.1
-        # measured flat-to--7% across the family, never worse). The
-        # reliable path stays EAGER: a lazy reliable checkpoint would
-        # re-run the round's plan in the checkpoint-write job.
-        return round_truncate(
-            d, checkpoint_dir, eager=checkpoint_dir is not None
-        )
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
     # symmetrize in ONE pass over `edges` (explode both orientations per
     # row) instead of union(edges, reverse(edges)) — the union form
     # consumed the edge producer twice, re-running an expensive upstream
@@ -771,18 +718,7 @@ def harmonic_centrality(
     form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    def ck(d: DataFrame) -> DataFrame:
-        # r14: LAZY local truncation — the plan still collapses to a
-        # LogicalRDD per round (O(1) plan growth), but the rounds chain
-        # into one job instead of one blocking job per round; the
-        # per-round RDDs cache on first compute, so nothing re-runs.
-        # Values identical (deterministic integer rounds; A/B at sf0.1
-        # measured flat-to--7% across the family, never worse). The
-        # reliable path stays EAGER: a lazy reliable checkpoint would
-        # re-run the round's plan in the checkpoint-write job.
-        return round_truncate(
-            d, checkpoint_dir, eager=checkpoint_dir is not None
-        )
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
@@ -855,18 +791,7 @@ def hyperball_harmonic(
     form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    def ck(d: DataFrame) -> DataFrame:
-        # r14: LAZY local truncation — the plan still collapses to a
-        # LogicalRDD per round (O(1) plan growth), but the rounds chain
-        # into one job instead of one blocking job per round; the
-        # per-round RDDs cache on first compute, so nothing re-runs.
-        # Values identical (deterministic integer rounds; A/B at sf0.1
-        # measured flat-to--7% across the family, never worse). The
-        # reliable path stays EAGER: a lazy reliable checkpoint would
-        # re-run the round's plan in the checkpoint-write job.
-        return round_truncate(
-            d, checkpoint_dir, eager=checkpoint_dir is not None
-        )
+    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
     from .sketch import _hll_reg_cols, hll_estimate
 
     e = (

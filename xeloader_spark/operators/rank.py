@@ -22,10 +22,10 @@ repartitionByRange's range boundaries come from sampling, so a
 re-evaluation could legally place rows differently and desynchronize the
 collected offsets from the final plan. The checkpoint goes through the
 ``plans.truncate`` registry (r14): its executor blocks are freed
-deterministically by the next ``release_persisted()`` call (bench and
-parity call it after materializing each result) instead of waiting for
-JVM garbage collection of the RDD, which on a long-lived session let
-blocks accumulate across pipelines (VERDICT r13 #4).
+deterministically by the next ``plans.truncate.release_persisted()``
+call (bench and parity call it after materializing each result) instead
+of waiting for JVM garbage collection of the RDD, which on a long-lived
+session let blocks accumulate across pipelines (VERDICT r13 #4).
 
 Cost: 1 range shuffle + 1 tiny count job + 1 broadcast join — vs the
 single-task funnel of the naive window. Used by the SSJoin vocabulary
@@ -37,14 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from ..plans.truncate import registered_local_checkpoint
 
-def release_persisted() -> int:
-    """Compatibility shim: rank no longer pins frames in a module-global
-    registry (the intermediate is localCheckpoint-ed, so its blocks are
-    released when the caller drops the returned DataFrame). Kept so
-    dedup.release_persisted()'s chained call keeps working."""
-    return 0
+from ..plans.truncate import registered_local_checkpoint
 
 
 def global_row_number(

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from ..plans.truncate import registered_local_checkpoint
+from ..plans.truncate import registered_local_checkpoint, round_truncate
 
 # Marker stopwords per language for the n-gram-free heuristic language ID.
 # Deliberately tiny: language ID here is a deterministic scoring operator,
@@ -1331,7 +1331,6 @@ def bpe_train(
 
     merges: list[tuple[int, str, str, int]] = []
     segs = seg0
-    prev_ckpt: DataFrame | None = None
     for rnd in range(1, iters + 1):
         pairs = segs.withColumn(
             "arr",
@@ -1371,17 +1370,10 @@ def bpe_train(
         )
         if checkpoint_every and rnd % checkpoint_every == 0:
             # per-round loop truncation — goes through the knob so
-            # production trains can use reliable checkpoints (r10)
-            from ..plans.truncate import round_truncate
-
-            ckpt = round_truncate(segs, checkpoint_dir)
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist()
-            prev_ckpt = ckpt
-            segs = ckpt
+            # production trains can use reliable checkpoints (r10); the
+            # registry frees the local blocks at release_persisted()
+            segs = round_truncate(segs, checkpoint_dir)
     seg0.unpersist()
-    if prev_ckpt is not None:
-        prev_ckpt.unpersist()
     return spark.createDataFrame(
         merges, "merge_round int, left_sym string, right_sym string, n long"
     )

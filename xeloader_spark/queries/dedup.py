@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import dedup as dd
+from ..plans.truncate import registered_persist
 
 _K = 12
 _BANDS = 4
@@ -163,13 +164,13 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import hash_bucket
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dd._persist(
+    pairs = registered_persist(
         dd.jaccard_pairs(dd.shingles(docs, n=3), threshold=_JACCARD_T)
     )
     resolved = dd.resolve_duplicates(docs.select("doc_id"), pairs)
     # Consumed by the member semi-join (twice) and the split-count agg —
     # persist once so the resolution lineage isn't replayed per consumer.
-    sp = dd._persist(resolved).select(
+    sp = registered_persist(resolved).select(
         "doc_id",
         "cluster_id",
         F.when(
@@ -268,21 +269,29 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift is caught by the correctness gate, not just by bench
     recall rows."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = dd._persist(dd.shingles(docs, n=3))
+    sh = dd.shingles(docs, n=3).persist()
     # Both pair frames persist (r13): each feeds TWO counts (its own
     # plus the intersection join), and un-persisted each count re-ran
     # the exhaustive-join / banding pipeline from the shingle cache.
-    true_pairs = dd._persist(
-        dd.jaccard_pairs(sh, threshold=_JACCARD_T).select("id_a", "id_b")
+    true_pairs = (
+        dd.jaccard_pairs(sh, threshold=_JACCARD_T)
+        .select("id_a", "id_b")
+        .persist()
     )
     sigs = dd.minhash_signatures(
         sh.withColumnRenamed("shingle", "tok"), k=_K
     )
-    cands = dd._persist(dd.lsh_candidate_pairs(sigs, bands=_BANDS, rows=_ROWS))
-    n_true = true_pairs.count()
-    n_cand = cands.count()
-    n_hit = cands.join(true_pairs, ["id_a", "id_b"]).count()
-    dd.release_persisted()  # counts are materialized; output is literal
+    cands = dd.lsh_candidate_pairs(sigs, bands=_BANDS, rows=_ROWS).persist()
+    try:
+        n_true = true_pairs.count()
+        n_cand = cands.count()
+        n_hit = cands.join(true_pairs, ["id_a", "id_b"]).count()
+    finally:
+        # counts are materialized and the output is literal: free this
+        # build's own frames only — a session-wide release here would
+        # also free frames other callers still read
+        for df in (sh, true_pairs, cands):
+            df.unpersist()
     out = spark.createDataFrame(
         [(n_true, n_cand, n_hit)],
         "n_true long, n_cand long, n_cand_true long",
@@ -1475,19 +1484,23 @@ def q_snm_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b")
     # persisted (r13): p1 feeds BOTH its own count and the multi-pass
     # union — un-persisted the whole pass-1 SNM pipeline ran twice
-    p1 = dd._persist(
+    p1 = (
         dd.sorted_neighborhood_pairs(
             docs, window=_SNM_WINDOW, key_tokens=_SNM_KEY_TOKENS
-        ).select("id_a", "id_b")
+        )
+        .select("id_a", "id_b")
+        .persist()
     )
     p2 = dd.sorted_neighborhood_pairs(
         docs, window=_SNM_WINDOW, key_sql=_SNM_SUFFIX_KEY_SPARK
     ).select("id_a", "id_b")
     multi = p1.union(p2).distinct()
-    n_true = true_pairs.count()
-    n_p1 = p1.count()
-    n_multi = multi.count()
-    dd.release_persisted()
+    try:
+        n_true = true_pairs.count()
+        n_p1 = p1.count()
+        n_multi = multi.count()
+    finally:
+        p1.unpersist()  # this build's own frame only (see q_dedup_eval)
     out = spark.createDataFrame(
         [(n_true, n_p1, n_multi)],
         "n_true long, n_pass1 long, n_multipass long",

@@ -21,6 +21,7 @@ from ..catalog import load_table
 from ..operators import dedup as dd
 from ..operators import sampling as sp
 from ..operators import text as tx
+from ..plans.truncate import registered_persist
 from .dedup import _JACCARD_T, clusters_sql, jaccard_pairs_sql
 from .sampling import _B, _bucket_sql
 from .text import _TOKS_LIST
@@ -31,9 +32,9 @@ def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     token counts of the kept canonical documents."""
     docs = load_table(spark, sf_dir, "documents")
     # the filtered frame feeds both the shingle pipeline and the resolve
-    # join — persisted (into the dedup module's registry, so callers'
+    # join — persisted (into the plans.truncate registry, so callers'
     # release_persisted() frees it) to run the quality stats once
-    kept = dd._persist(
+    kept = registered_persist(
         tx.quality_flag(tx.text_stats(docs))
         .filter(F.col("quality_ok"))
         .select("doc_id", "source", "n_tokens", "text")

@@ -194,14 +194,14 @@ def _pagerank_sql(
     computed IN SQL so the oracle needs no runtime parameters."""
     edges = edges_sql or _knn_graph_sql(_KNN_K, _KNN_BANDS, _KNN_PPB)
     head = f"""
-        WITH edges AS (SELECT src, dst FROM ({edges})),
-        nodes AS (
+        WITH edges AS MATERIALIZED (SELECT src, dst FROM ({edges})),
+        nodes AS MATERIALIZED (
             SELECT DISTINCT id FROM (
                 SELECT src AS id FROM edges
                 UNION ALL SELECT dst AS id FROM edges
             )
         ),
-        nn AS (
+        nn AS MATERIALIZED (
             SELECT COUNT(*) AS n,
                    CAST({scale} // COUNT(*) AS BIGINT) AS init,
                    CAST((({damp_den - damp_num}) * ({scale} // COUNT(*)))
@@ -211,11 +211,11 @@ def _pagerank_sql(
         outdeg AS (
             SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY 1
         ),
-        ew AS (
+        ew AS MATERIALIZED (
             SELECT e.src, e.dst, o.outdeg
             FROM edges e JOIN outdeg o ON e.src = o.src
         ),
-        r0 AS (SELECT id, nn.init AS rank FROM nodes, nn)"""
+        r0 AS MATERIALIZED (SELECT id, nn.init AS rank FROM nodes, nn)"""
     rounds = []
     for i in range(iters):
         rounds.append(f""",
@@ -225,7 +225,7 @@ def _pagerank_sql(
             FROM ew JOIN r{i} ON r{i}.id = ew.src
             GROUP BY 1
         ),
-        r{i + 1} AS (
+        r{i + 1} AS MATERIALIZED (
             SELECT n.id,
                    CAST(nn.base + ({damp_num} * COALESCE(c{i}.s, 0))
                         // {damp_den} AS BIGINT) AS rank
@@ -406,8 +406,8 @@ def _label_prop_sql(iters: int, seed_thr: int) -> str:
     )
     parts = [
         f"""
-        WITH edges AS (SELECT src, dst FROM ({knn})),
-        l0 AS (
+        WITH edges AS MATERIALIZED (SELECT src, dst FROM ({knn})),
+        l0 AS MATERIALIZED (
             SELECT vec_id AS id, CAST(label AS BIGINT) AS label,
                    CAST(0 AS BIGINT) AS round_assigned
             FROM embeddings WHERE {seed_gate}
@@ -431,7 +431,9 @@ def _label_prop_sql(iters: int, seed_thr: int) -> str:
                   FROM v{r})
             WHERE rk = 1
         ),
-        l{r} AS (SELECT * FROM l{r - 1} UNION ALL SELECT * FROM p{r})"""
+        l{r} AS MATERIALIZED (
+            SELECT * FROM l{r - 1} UNION ALL SELECT * FROM p{r}
+        )"""
         )
     parts.append(f"""
         SELECT em.vec_id AS id, CAST(em.label AS BIGINT) AS true_label,
@@ -486,12 +488,12 @@ def _modularity_sql(iters: int, seed_thr: int) -> str:
     knn = _knn_graph_sql(_KNN_K, _KNN_BANDS, _KNN_PPB)
     return f"""
         WITH lp AS ({lp}),
-        comm AS (
+        comm AS MATERIALIZED (
             SELECT id AS nid,
                    COALESCE(pred_label, id + 1000000) AS c
             FROM lp
         ),
-        und AS (
+        und AS MATERIALIZED (
             SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
             FROM ({knn}) WHERE src <> dst
         ),
@@ -549,16 +551,16 @@ def _triangle_sql() -> str:
     knn = _knn_graph_sql(_KNN_K, _KNN_BANDS, _KNN_PPB)
     return f"""
         WITH edges AS (SELECT src, dst FROM ({knn})),
-        und AS (
+        und AS MATERIALIZED (
             SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
             FROM edges WHERE src <> dst
         ),
-        deg AS (
+        deg AS MATERIALIZED (
             SELECT id, CAST(COUNT(*) AS BIGINT) AS degree FROM (
                 SELECT a AS id FROM und UNION ALL SELECT b AS id FROM und
             ) GROUP BY 1
         ),
-        o AS (
+        o AS MATERIALIZED (
             SELECT CASE WHEN (da.degree < db.degree)
                           OR (da.degree = db.degree AND u.a < u.b)
                         THEN u.a ELSE u.b END AS u,
@@ -577,7 +579,7 @@ def _triangle_sql() -> str:
             FROM o e1 JOIN o e2 ON e1.u = e2.u
             WHERE (e1.dv < e2.dv) OR (e1.dv = e2.dv AND e1.v < e2.v)
         ),
-        t AS (
+        t AS MATERIALIZED (
             SELECT w.u, w.x, w.y
             FROM w JOIN o ON o.u = w.x AND o.v = w.y
         ),

@@ -2453,8 +2453,8 @@ def _hits_sql(iters: int, scale: int, edges_sql: str, id_alias: str) -> str:
     DuckDB's HUGEINT, `//` == Spark `div` floor semantics on
     non-negative values)."""
     head = f"""
-        WITH edges AS (SELECT src, dst FROM ({edges_sql})),
-        nodes AS (
+        WITH edges AS MATERIALIZED (SELECT src, dst FROM ({edges_sql})),
+        nodes AS MATERIALIZED (
             SELECT DISTINCT id FROM (
                 SELECT src AS id FROM edges
                 UNION ALL SELECT dst AS id FROM edges
@@ -2464,27 +2464,27 @@ def _hits_sql(iters: int, scale: int, edges_sql: str, id_alias: str) -> str:
     rounds = []
     for i in range(iters):
         rounds.append(f""",
-        ar{i} AS (
+        ar{i} AS MATERIALIZED (
             SELECT e.dst AS id, CAST(SUM(h.h) AS BIGINT) AS raw
             FROM edges e JOIN h{i} h ON h.id = e.src GROUP BY 1
         ),
         at{i} AS (
             SELECT CAST(COALESCE(SUM(raw), 0) AS BIGINT) AS t FROM ar{i}
         ),
-        a{i + 1} AS (
+        a{i + 1} AS MATERIALIZED (
             SELECT n.id,
                    CAST(COALESCE(ar.raw, 0)
                         // GREATEST(t // {scale}, 1) AS BIGINT) AS a
             FROM nodes n CROSS JOIN at{i} LEFT JOIN ar{i} ar ON ar.id = n.id
         ),
-        hr{i} AS (
+        hr{i} AS MATERIALIZED (
             SELECT e.src AS id, CAST(SUM(a.a) AS BIGINT) AS raw
             FROM edges e JOIN a{i + 1} a ON a.id = e.dst GROUP BY 1
         ),
         ht{i} AS (
             SELECT CAST(COALESCE(SUM(raw), 0) AS BIGINT) AS t FROM hr{i}
         ),
-        h{i + 1} AS (
+        h{i + 1} AS MATERIALIZED (
             SELECT n.id,
                    CAST(COALESCE(hr.raw, 0)
                         // GREATEST(t // {scale}, 1) AS BIGINT) AS h
