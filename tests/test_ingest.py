@@ -352,3 +352,108 @@ def test_json_source_reads_gzip_transparently(spark, tmp_path):
     got = read_json_events(spark, str(tmp_path)).collect()
     assert len(got) == 2
     assert {r.event_id for r in got} == {1, 2}
+
+
+def _assert_rows_stamped(spark, out):
+    """Every stored row carries a file id that names a `_lineage` row."""
+    result = spark.read.parquet(out)
+    lineage = spark.read.parquet(out + "_lineage")
+    assert result.filter(F.col("e_imported_file_id").isNull()).count() == 0
+    orphans = result.join(
+        lineage, result.e_imported_file_id == lineage.file_id, "left_anti"
+    )
+    assert orphans.count() == 0
+
+
+def test_incremental_ingest_escaped_paths(spark, xel_dir, tmp_path):
+    """A directory and file names with a space and a `%`, and file names
+    with glob metacharacters: the listing's URIs are percent-encoded, so
+    they must be decoded (and glob-escaped) to be read, while the lineage
+    keeps the encoded form that `input_file_name()` stamps."""
+    root, _, _ = xel_dir
+    src = str(tmp_path / "in dir %41")
+    os.makedirs(src)
+
+    def add_file(i):
+        shutil.copy(
+            os.path.join(root, f"SessionA_{i}_13200{i}.parquet"),
+            os.path.join(src, f"Sess A%25[1]{{a,b}}*?_{i}_13200{i}.parquet"),
+        )
+
+    for i in range(3):
+        add_file(i)
+    out = str(tmp_path / "out %41")
+
+    rep1 = ing.ingest(spark, src, out, ing.IngestConfig(write_mode="overwrite"))
+    assert rep1.n_files == 3
+    n1 = spark.read.parquet(out).count()
+    assert n1 == rep1.n_events > 0
+    _assert_rows_stamped(spark, out)
+
+    # one new file appears; only it is loaded
+    add_file(3)
+    rep2 = ing.ingest_incremental(spark, src, out, ing.IngestConfig())
+    assert rep2.n_files == 1
+    assert spark.read.parquet(out).count() == n1 + rep2.n_events
+    _assert_rows_stamped(spark, out)
+    lineage = spark.read.parquet(out + "_lineage").collect()
+    assert sorted(r.file_id for r in lineage) == [1, 2, 3, 4]
+    stored = {
+        r.f
+        for r in spark.read.parquet(out)
+        .select(F.col("e_source_file").alias("f"))
+        .distinct()
+        .collect()
+    }
+    assert stored == {r.file_path for r in lineage}
+
+
+def test_zero_row_file_registered_once(spark, xel_dir, tmp_path):
+    """A listed file with no rows is registered like any other (the
+    reference registers every file it opens), loads nothing, and later
+    incremental runs see it as already loaded."""
+    root, _, _ = xel_dir
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    for n in [f"SessionA_{i}_13200{i}.parquet" for i in range(4)] + [
+        "SessionA_9_132009.parquet",
+        "OtherSess_0_999.parquet",
+    ]:
+        shutil.copy(os.path.join(root, n), src)
+    stage = str(tmp_path / "stage")
+    load_table(spark, SF, "events").limit(0).coalesce(1).write.parquet(stage)
+    part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
+    empty = "SessionA_5_132005.parquet"
+    os.rename(os.path.join(stage, part), os.path.join(src, empty))
+
+    out = str(tmp_path / "out")
+    cfg = ing.IngestConfig(write_mode="overwrite", max_errors_per_file=100)
+    rep = ing.ingest(spark, src, out, cfg)
+    assert rep.n_files == 6
+    assert rep.n_events == 1000
+    lineage = spark.read.parquet(out + "_lineage")
+    empty_ids = [r.file_id for r in lineage.collect() if r.file_name == empty]
+    assert len(empty_ids) == 1
+    stored = spark.read.parquet(out)
+    assert stored.filter(F.col("e_imported_file_id") == empty_ids[0]).count() == 0
+
+    for _ in range(2):
+        inc = ing.ingest_incremental(spark, src, out, ing.IngestConfig())
+        assert inc.n_files == 0
+    assert spark.read.parquet(out + "_lineage").count() == 6
+    assert spark.read.parquet(out).count() == 1000
+
+
+def test_listing_starts_no_job(spark, xel_dir):
+    """The file inventory comes from the listing alone: no Spark job, so
+    no event row is read to decide a load's files."""
+    root, _, _ = xel_dir
+    sc = spark.sparkContext
+    sc.setJobGroup("list_event_files", "listing only")
+    try:
+        files = ing.list_event_files(spark, root, ing.IngestConfig())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert files and all("OtherSess" not in f for f in files)
+    assert files == sorted(files)
+    assert sc.statusTracker().getJobIdsForGroup("list_event_files") == []

@@ -13,8 +13,10 @@ sidecar, not the data, supplies columns and types
 
 Differences from the reference, by design: the sink is a path (parquet
 demux tables; use the JDBC-parity sink programmatically for SQL Server),
-and -t/-b/-R have no effect (Spark owns task parallelism, writer
-batching, and read-ahead — see SURVEY S17/S24/S25).
+and -t/-b/-R/-X/-B have no effect (Spark owns task parallelism, writer
+batching, and read-ahead — see SURVEY S17/S24/S25; the sink stores XML
+and binary values whole, and `schema.LayoutConfig` carries those widths
+for the SQL Server DDL).
 """
 
 from __future__ import annotations
@@ -50,8 +52,10 @@ def build_parser() -> argparse.ArgumentParser:
     mode.add_argument("-a", dest="mode", action="store_const", const="append",
                       help="append (reference -a, default)")
     ap.add_argument("-L", type=int, default=1024, help="string truncation chars")
-    ap.add_argument("-X", type=int, default=4000, help="XML truncation chars")
-    ap.add_argument("-B", type=int, default=1024, help="binary truncation bytes")
+    ap.add_argument("-X", type=int, default=4000,
+                    help="accepted for parity; XML values are stored whole")
+    ap.add_argument("-B", type=int, default=1024,
+                    help="accepted for parity; binary values are stored whole")
     ap.add_argument("-e", type=int, default=100, help="error budget per file")
     ap.add_argument("-z", default="UTC",
                     help="timezone for local-time column — Windows ID "
@@ -84,8 +88,6 @@ def main(argv: list[str] | None = None) -> int:
         session_filter=not args.no_session_filter,
         timezone=to_iana(args.z),
         string_trunc=args.L,
-        xml_trunc=args.X,
-        binary_trunc=args.B,
         max_errors_per_file=args.e,
         write_mode=args.mode or "append",
         layout=args.I.lower(),

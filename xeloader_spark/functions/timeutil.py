@@ -7,9 +7,9 @@ the zone comes from `-z` or the system zone
 XELoader/InputParameters.cs:622-626.
 
 Deviations (documented per SURVEY §7.3):
-- the coarse column is `date_trunc('minute', …)` by default; the reference
-  relies on SQL Server's smalldatetime cast which *rounds* (seconds ≥ 29.998
-  round up) — `smalldatetime_round` reproduces that exactly if wanted;
+- the coarse column is `date_trunc('minute', …)`; the reference relies on
+  SQL Server's smalldatetime cast which *rounds* (seconds ≥ 29.998 round
+  up) — `smalldatetime_round` reproduces that exactly (`q_smalldatetime_round`);
 - zones are IANA names (Spark), not Windows zone IDs.
 """
 
@@ -30,15 +30,13 @@ def three_timestamp_projection(
     df: DataFrame,
     ts_col: str = "ts",
     tz: str = "UTC",
-    rounded_coarse: bool = False,
 ) -> DataFrame:
     """Append `e_time_of_event` (coarse), `e_time_of_event_utc`,
     `e_time_of_event_local` columns. All JVM-side built-ins — stays inside
     whole-stage codegen."""
     ts = F.col(ts_col)
-    coarse = smalldatetime_round(ts) if rounded_coarse else F.date_trunc("minute", ts)
     return (
-        df.withColumn("e_time_of_event", coarse)
+        df.withColumn("e_time_of_event", F.date_trunc("minute", ts))
         .withColumn("e_time_of_event_utc", ts)
         .withColumn("e_time_of_event_local", F.from_utc_timestamp(ts, tz))
     )

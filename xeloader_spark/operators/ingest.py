@@ -7,9 +7,10 @@ columns, truncate, count errors against a budget → micro-batch bulk-copy
 → lineage insert/update → global statistics.
 
 Spark design (see module functions for per-stage citations):
-- files are enumerated by the DataSource (`pathGlobFilter` = the S2
-  wildcard gate); per-file parallelism (S24) is Spark's task model;
-  read-ahead (S25) is the columnar reader's own prefetch;
+- the file inventory comes from the listing: `list_event_files` applies
+  the S2/S3 gates to file names, and the scan, lineage and incremental
+  skip all take its one list; per-file parallelism (S24) is Spark's task
+  model; read-ahead (S25) is the columnar reader's own prefetch;
 - the whole flatten/transform stage is one declarative projection —
   Catalyst fuses it into a single whole-stage-codegen span over the scan;
 - demux (S8) is `partitionBy("event_type")` on write: one logical table
@@ -17,24 +18,25 @@ Spark design (see module functions for per-stage citations):
   this is strictly better (partition pruning replaces table routing, and
   small event types don't produce tiny tables);
 - micro-batching (S17) is the writer's row-group sizing, not user code;
-- lineage (S23) is a broadcast dimension derived from file paths;
+- lineage (S23) is a broadcast dimension built from the file list;
 - the error budget (S26) is a per-file aggregate gate, not a per-row
   try/catch; statistics (S27) come from `observe()` metrics which are
   retry-safe, unlike raw accumulators.
 
-Scale notes: nothing here collects to the driver except the (tiny) lineage
-dimension and the single-row stats; every join against lineage is
-broadcast; the write shuffles only if `repartition_by_type` is requested
-(off by default — ingest stays shuffle-free end-to-end).
+Scale notes: nothing here collects to the driver except the single-row
+stats and the per-file error report (O(#files)); every join against
+lineage is broadcast.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from collections import Counter
 from dataclasses import dataclass, field, replace
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.timeutil import three_timestamp_projection
@@ -52,12 +54,9 @@ class IngestConfig:
     timezone: str = "UTC"  # -z (InputParameters.cs:274-295)
     bound_widths: bool = False  # layout can't hold LOBs (EventMetadata.cs:355-397)
     string_trunc: int = 1024  # -L (InputParameters.cs:45)
-    xml_trunc: int = 4000  # -X (InputParameters.cs:47)
-    binary_trunc: int = 1024  # -B (InputParameters.cs:48)
     max_errors_per_file: int = 100  # -e (InputParameters.cs:49)
     write_mode: str = "append"  # -a/-c/-w ↔ append/truncate/overwrite (S19)
     layout: str = "columnstore"  # -I (EventMetadata.cs:203-244)
-    rounded_coarse_ts: bool = False  # exact smalldatetime rounding if True
     storage_format: str = "parquet"  # sink format: parquet | orc | csv | json
 
 
@@ -82,82 +81,60 @@ def wildcard_to_regex(pattern: str) -> str:
     return "(?i)^" + re.escape(pattern).replace("\\*", ".*").replace("\\?", ".") + "$"
 
 
-# ----------------------------------------------------------------- S1/S2/S4
-def scan_events(
+# -------------------------------------------------------------- S1/S2/S3
+def list_event_files(
     spark: SparkSession,
     input_path: str | list[str],
     cfg: IngestConfig | None = None,
-    schema=None,
-) -> DataFrame:
-    """S1 directory scan + S2 wildcard gate + S4 event-stream source.
-
-    `pathGlobFilter` applies the wildcard at file-listing time (so
-    non-matching files are never opened — same effect as the reference
-    skipping them, FileProcessor.cs:148-174) and `input_file_name()`
-    carries per-row provenance. An explicit `schema` skips inference —
-    the S5 XEL+XEM sidecar-metadata path (FileProcessor.cs:280-334).
-    `input_path` may be a directory or an explicit file list (the
-    incremental path passes exactly the not-yet-loaded files).
-    """
+) -> list[str]:
+    """S1 directory scan + S2 wildcard gate + S3 session gate, decided
+    from the listing before any file is opened, as the reference does
+    (FileProcessor.cs:99-110, :148-174). The `binaryFile` source has a
+    fixed schema, so its listing starts no Spark job. S3: the reference
+    keeps the session of the *first* file in directory order
+    (order-dependent); here the majority session wins, ties broken
+    lexicographically. Returns the sorted URIs, the exact strings
+    `input_file_name()` yields for these files (percent-encoded)."""
     cfg = cfg or IngestConfig()
     paths = [input_path] if isinstance(input_path, str) else list(input_path)
-    reader = spark.read.option("pathGlobFilter", cfg.file_pattern)
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(*paths)
-    df = df.withColumn("e_source_file", F.input_file_name())
-    if cfg.session_filter:
-        df = filter_session_files(df)
-    return df
-
-
-def filter_session_files(
-    df: DataFrame, session_pattern: str | None = None
-) -> DataFrame:
-    """S3: keep only files from one XE session. The reference derives the
-    prefix from the *first* file in directory order and skips others
-    (FileProcessor.cs:99-110) — order-dependent. Deterministic improvement:
-    the majority session wins (tie-break lexicographic); the choice is made
-    over the distinct file list (O(#files), metadata-only), and the filter
-    itself is a regex on provenance."""
-    if session_pattern is None:
-        files = [r.f for r in df.select(F.col("e_source_file").alias("f")).distinct().collect()]
-        if not files:
-            return df
-        counts: dict[str, int] = {}
-        for f in files:
-            counts[get_leading_file_pattern(f)] = counts.get(get_leading_file_pattern(f), 0) + 1
-        session_pattern = min(counts, key=lambda p: (-counts[p], p))
-    rx = wildcard_to_regex(session_pattern)
-    return df.filter(
-        F.regexp_extract(
-            F.element_at(F.split(F.col("e_source_file"), "/"), -1), rx, 0
-        )
-        != ""
+    files = sorted(
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", cfg.file_pattern)
+        .load(*paths)
+        .inputFiles()
     )
+    if not cfg.session_filter or not files:
+        return files
+    names = {f: unquote(f.rsplit("/", 1)[-1]) for f in files}
+    counts = Counter(get_leading_file_pattern(n) for n in names.values())
+    session = min(counts, key=lambda p: (-counts[p], p))
+    rx = re.compile(wildcard_to_regex(session))
+    return [f for f in files if rx.match(names[f])]
 
 
 # --------------------------------------------------------------------- S23
-def build_lineage(df: DataFrame, id_offset: int = 0) -> DataFrame:
+def build_lineage(
+    spark: SparkSession, files: list[str], id_offset: int = 0
+) -> tuple[list[Row], DataFrame]:
     """Lineage dimension — `dbo.tbl_ImportedXEventFiles`
-    (InputParameters.cs:543-558): one row per source file with a dense
-    surrogate `file_id`. The reference uses an IDENTITY column; we use
-    row_number over file name (+ `id_offset` so incremental runs continue
-    the sequence), which is deterministic across retries
-    (monotonically_increasing_id is not). The dimension is tiny (#files)
-    — always broadcastable; the rank is still computed distributed
-    (operators/rank.global_row_number) so even a multi-million-file
-    backfill never funnels through one task."""
-    from xeloader_spark.operators.rank import global_row_number
-
-    files = df.select(F.col("e_source_file").alias("file_path")).distinct()
-    files = global_row_number(files, ["file_path"], out_col="_rn")
-    return files.select(
-        (F.col("_rn") + F.lit(id_offset)).alias("file_id"),
-        F.regexp_extract("file_path", r"^(.*)/[^/]+$", 1).alias("file_folder"),
-        F.element_at(F.split("file_path", "/"), -1).alias("file_name"),
-        F.col("file_path"),
-    )
+    (InputParameters.cs:543-558): one row per listed file with a dense
+    surrogate `file_id`. The reference uses an IDENTITY column; here the
+    id is `id_offset` + the 1-based position in the sorted listing
+    (`id_offset` lets incremental runs continue the sequence), which is
+    deterministic across retries. Every listed file is registered, also
+    one with no rows, as the reference registers every file it opens.
+    Returns the rows and the same rows as a JVM-local literal frame
+    (`createDataFrame` over Python rows would start Python workers)."""
+    rows = []
+    for i, f in enumerate(files, 1):
+        folder, name = f.rsplit("/", 1)
+        rows.append(
+            Row(file_id=id_offset + i, file_folder=folder, file_name=name, file_path=f)
+        )
+    structs = [F.struct(*[F.lit(v).alias(k) for k, v in r.asDict().items()]) for r in rows]
+    # one partition: a default-sliced range writes an empty lineage file
+    frame = spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
+    return rows, frame.withColumn("file_id", F.col("file_id").cast("long"))
 
 
 def stamp_lineage(df: DataFrame, lineage: DataFrame) -> DataFrame:
@@ -180,9 +157,7 @@ def flatten_events(df: DataFrame, cfg: IngestConfig | None = None) -> DataFrame:
     fields. One declarative select — Catalyst fuses it with the scan.
     """
     cfg = cfg or IngestConfig()
-    out = three_timestamp_projection(
-        df, ts_col="ts", tz=cfg.timezone, rounded_coarse=cfg.rounded_coarse_ts
-    )
+    out = three_timestamp_projection(df, ts_col="ts", tz=cfg.timezone)
     # Error detection happens on the RAW payload, before truncation — the
     # reference counts errors at extraction time (EventHolder.cs:76-96) and
     # truncates only at store time (EventHolder.cs:273-293).
@@ -353,17 +328,33 @@ def ingest(
     file_id_offset: int = 0,
 ) -> IngestReport:
     """End-to-end ingest — entry point A of the reference
-    (Main → ProcessFiles → ProcessOneFile, SURVEY §3.1), one lazy plan:
+    (Main → ProcessFiles → ProcessOneFile, SURVEY §3.1), one lazy plan
+    over exactly the files `list_event_files` lists:
 
-        scan(+gates) → lineage stamp → flatten(+truncate) → error gate
+        scan → lineage stamp → flatten(+truncate) → error gate
         → observe(stats) → demux write
 
-    Single pass over the data; the only driver-side materializations are
-    the lineage dimension and the per-file error report (both O(#files)).
-    """
+    The only driver-side materialization is the per-file error report
+    (O(#files))."""
     cfg = cfg or IngestConfig()
-    raw = scan_events(spark, input_path, cfg)
-    lineage = build_lineage(raw, id_offset=file_id_offset).cache()
+    files = list_event_files(spark, input_path, cfg)
+    return _load_files(spark, files, output_path, cfg, file_id_offset)
+
+
+def _load_files(
+    spark: SparkSession,
+    files: list[str],
+    output_path: str,
+    cfg: IngestConfig,
+    file_id_offset: int,
+) -> IngestReport:
+    """`ingest` over an already-decided file list."""
+    # S4: read the decoded paths, glob metacharacters escaped because the
+    # reader globs every path; `input_file_name()` then yields the listed
+    # (percent-encoded) URIs again, the lineage join key
+    paths = [re.sub(r"([\[\]{}*?\\])", r"\\\1", unquote(f)) for f in files]
+    raw = spark.read.parquet(*paths).withColumn("e_source_file", F.input_file_name())
+    lineage_rows, lineage = build_lineage(spark, files, id_offset=file_id_offset)
     stamped = stamp_lineage(raw, lineage)
     flat = flatten_events(stamped, cfg)
     good, file_report = split_by_error_budget(flat, cfg)
@@ -384,15 +375,13 @@ def ingest(
     # lineage rows to force a retry), matching the reference's handling of
     # aborted files. The failure mode is "missing until retried", never
     # "silently duplicated".
-    lineage_rows = lineage.collect()
     lineage.write.mode(
         "overwrite" if cfg.write_mode != "append" else "append"
-    ).parquet(os.path.join(output_path + "_lineage"))
+    ).parquet(output_path + "_lineage")
 
     demux_write(observed, output_path, cfg)
 
     rep_rows = file_report.collect()
-    lineage.unpersist()
 
     metrics = obs.get
     return IngestReport(
@@ -420,10 +409,10 @@ def ingest_incremental(
     the new files and nothing twice — restart granularity is the file,
     same as the reference's per-file processing loop.
 
-    Cost model: the candidate listing and the lineage table are both
-    O(#files) and handled driver-side; no event data is read for already-
-    loaded files (the pruned listing is passed to the scan as an explicit
-    file list). Files whose load ABORTED (error budget) are registered,
+    Cost model: the candidate list is `list_event_files`, a listing that
+    starts no Spark job and reads no event row; the lineage table
+    (O(#files)) is read and collected to the driver; only the new files'
+    events are read. Files whose load ABORTED (error budget) are registered,
     and therefore not retried — matching the reference, which registers
     the file before loading it; delete its lineage row to force a retry.
     The same register-then-load order applies to crashes: `ingest` writes
@@ -432,10 +421,7 @@ def ingest_incremental(
     deleting its lineage row is the explicit retry path.
     """
     cfg = cfg or IngestConfig()
-    listing = scan_events(spark, input_path, cfg).select(
-        F.col("e_source_file").alias("file_path")
-    )
-    candidates = {r.file_path for r in listing.distinct().collect()}
+    files = list_event_files(spark, input_path, cfg)
     lineage_path = output_path + "_lineage"
     loaded: set[str] = set()
     max_id = 0
@@ -446,13 +432,11 @@ def ingest_incremental(
         max_id = max((r.file_id for r in rows), default=0)
     except Exception:  # no lineage yet — first run
         pass
-    new_files = sorted(candidates - loaded)
+    new_files = [f for f in files if f not in loaded]
     if not new_files:
         return IngestReport()
     inc_cfg = replace(cfg, write_mode="append")  # incremental ⇒ append
-    return ingest(
-        spark, new_files, output_path, inc_cfg, file_id_offset=max_id
-    )
+    return _load_files(spark, new_files, output_path, inc_cfg, max_id)
 
 
 def compact_output(

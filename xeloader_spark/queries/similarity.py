@@ -285,10 +285,10 @@ def _pagerank_weighted_sql(
 ) -> str:
     knn = _knn_graph_sql(_KNN_K, _KNN_BANDS, _KNN_PPB)
     head = f"""
-        WITH e AS (
+        WITH e AS MATERIALIZED (
             SELECT src, dst, dot AS w FROM ({knn}) WHERE dot > 0
         ),
-        nodes AS (
+        nodes AS MATERIALIZED (
             SELECT DISTINCT id FROM (
                 SELECT src AS id FROM e UNION ALL SELECT dst AS id FROM e
             )
@@ -299,18 +299,18 @@ def _pagerank_weighted_sql(
             FROM nodes
         ),
         outw AS (SELECT src, SUM(w) AS outw FROM e GROUP BY 1),
-        ew AS (
+        ew AS MATERIALIZED (
             SELECT e.src, e.dst,
                    CAST((e.w * {wscale}) // o.outw AS BIGINT) AS wn
             FROM e JOIN outw o ON o.src = e.src
         ),
-        seeds AS (
+        seeds AS MATERIALIZED (
             SELECT vec_id AS id FROM embeddings
             WHERE ('0x' || substr(md5('pprseed'
                       || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
                   % 10000 < {seed_thr}
         ),
-        sb AS (
+        sb AS MATERIALIZED (
             SELECT CAST((({damp_den - damp_num}) * {scale})
                         // ({damp_den} * COUNT(*)) AS BIGINT) AS base
             FROM seeds

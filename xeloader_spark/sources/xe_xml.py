@@ -161,12 +161,8 @@ def read_xml_events(
         spark.read.option("pathGlobFilter", pattern)
         .text(path)
         .withColumnRenamed("value", "xml")
-        .withColumn("e_source_file", F.input_file_name())
     )
-    parsed = parse_events_xml(raw)
-    return parsed.withColumn(
-        "e_source_file", F.input_file_name()
-    )
+    return parse_events_xml(raw).withColumn("e_source_file", F.input_file_name())
 
 
 def parse_xem_metadata(xml_text: str) -> tuple[dict[str, str], dict[str, str]]:
@@ -212,14 +208,14 @@ def flatten_xml_events_explicit(
     """S5: project map-typed event rows to the flat `c_`/`a_` model with
     an EXPLICIT column inventory — the sidecar decides the columns and
     their §1.3 types. No inference scan runs (compare
-    `flatten_xml_events`, which must first distinct-scan the maps for
-    key names — two jobs over the data before the real one). Declared
+    `flatten_xml_events`, which must first scan the maps for key
+    names — one job over the data before the real one). Declared
     columns missing from this batch come out typed and NULL (the
     sidecar is the contract, not the sample); undeclared fields in the
     data are dropped (they are not part of the declared schema).
 
     At 100 TB this is the difference between a metadata-only plan
-    build and two extra full scans of the event store."""
+    build and an extra full scan of the event store."""
     from ..schema import action_column, field_column, spark_type_for
 
     cols = [F.col("event_type"), F.col("ts")]
@@ -261,33 +257,20 @@ def read_xml_events_with_xem(
 
 def flatten_xml_events(parsed: DataFrame, field_types: dict[str, str] | None = None) -> DataFrame:
     """Project the map-typed event rows to the flat `c_`/`a_` column model
-    (S9) for a known field/action inventory, applying §1.3 type mapping.
-    `field_types` maps field name → XEvent type name (defaults to string).
+    (S9), inferring the field/action inventory from the data and applying
+    §1.3 type mapping. `field_types` maps field or action name → XEvent
+    type name (defaults to string). One job collects both maps' key sets;
+    the projection is `flatten_xml_events_explicit`'s.
     """
-    from ..schema import action_column, field_column, spark_type_for
-
     field_types = field_types or {}
-    cols = [F.col("event_type"), F.col("ts")]
-    names = parsed.select(
-        F.explode(F.map_keys("fields")).alias("k")
-    ).distinct()
-    field_names = sorted(r.k for r in names.collect())
-    action_names = sorted(
-        r.k
-        for r in parsed.select(F.explode(F.map_keys("actions")).alias("k"))
-        .distinct()
-        .collect()
+    keys = parsed.agg(
+        F.collect_set(F.map_keys("fields")).alias("fields"),
+        F.collect_set(F.map_keys("actions")).alias("actions"),
+    ).first()
+
+    def typed(key_sets):
+        return {k: field_types.get(k, "string") for ks in key_sets for k in ks}
+
+    return flatten_xml_events_explicit(
+        parsed, typed(keys["fields"]), typed(keys["actions"])
     )
-    for fname in field_names:
-        t = spark_type_for(field_types.get(fname, "string"))
-        cols.append(
-            F.element_at(F.col("fields"), fname).cast(t).alias(field_column(fname))
-        )
-    for aname in action_names:
-        t = spark_type_for(field_types.get(aname, "string"))
-        cols.append(
-            F.element_at(F.col("actions"), aname).cast(t).alias(action_column(aname))
-        )
-    if "e_source_file" in parsed.columns:
-        cols.append(F.col("e_source_file"))
-    return parsed.select(*cols)
