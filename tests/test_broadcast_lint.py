@@ -65,10 +65,9 @@ WHITELIST: dict[str, list[str]] = {
         ".crossJoin(F.broadcast(ta))",
         ".crossJoin(F.broadcast(th))",
     ],
-    # file-catalog-sized lineage / per-file abort report
+    # file-catalog-sized lineage
     "operators/ingest.py": [
-        'F.broadcast(lineage.select("file_id", "file_path")),',
-        'F.broadcast(report.filter(~F.col("aborted")).select(file_col)),',
+        'return df.join(F.broadcast(ids), "e_source_file", "left").select(',
     ],
     # support-pruned item vocabulary + 1-row basket total
     "operators/itemsets.py": [

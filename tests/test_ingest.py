@@ -413,13 +413,7 @@ def test_zero_row_file_registered_once(spark, xel_dir, tmp_path):
     reference registers every file it opens), loads nothing, and later
     incremental runs see it as already loaded."""
     root, _, _ = xel_dir
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    for n in [f"SessionA_{i}_13200{i}.parquet" for i in range(4)] + [
-        "SessionA_9_132009.parquet",
-        "OtherSess_0_999.parquet",
-    ]:
-        shutil.copy(os.path.join(root, n), src)
+    src = _copy_fixture(root, str(tmp_path / "in"))
     stage = str(tmp_path / "stage")
     load_table(spark, SF, "events").limit(0).coalesce(1).write.parquet(stage)
     part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
@@ -444,16 +438,111 @@ def test_zero_row_file_registered_once(spark, xel_dir, tmp_path):
     assert spark.read.parquet(out).count() == 1000
 
 
+def _jobs_in_group(spark, group, fn):
+    """`fn()`'s result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_listing_starts_no_job(spark, xel_dir):
     """The file inventory comes from the listing alone: no Spark job, so
     no event row is read to decide a load's files."""
     root, _, _ = xel_dir
-    sc = spark.sparkContext
-    sc.setJobGroup("list_event_files", "listing only")
-    try:
-        files = ing.list_event_files(spark, root, ing.IngestConfig())
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    files, n_jobs = _jobs_in_group(
+        spark,
+        "list_event_files",
+        lambda: ing.list_event_files(spark, root, ing.IngestConfig()),
+    )
     assert files and all("OtherSess" not in f for f in files)
     assert files == sorted(files)
-    assert sc.statusTracker().getJobIdsForGroup("list_event_files") == []
+    assert n_jobs == 0
+
+
+_FIXTURE_FILES = [f"SessionA_{i}_13200{i}.parquet" for i in range(4)] + [
+    "SessionA_9_132009.parquet",
+    "OtherSess_0_999.parquet",
+]
+
+
+def _copy_fixture(root, dst, names=_FIXTURE_FILES):
+    """A private copy of fixture files, so a test sees exactly these."""
+    os.makedirs(dst, exist_ok=True)
+    for n in names:
+        shutil.copy(os.path.join(root, n), dst)
+    return dst
+
+
+def test_repeated_append_continues_file_ids(spark, xel_dir, tmp_path):
+    """S23 identity: a second plain append of the same directory registers
+    its files under new ids, continuing the store's sequence, and its
+    events carry those ids."""
+    root, _, _ = xel_dir
+    src = _copy_fixture(root, str(tmp_path / "in"))
+    out = str(tmp_path / "out")
+    cfg = ing.IngestConfig(write_mode="append", max_errors_per_file=100)
+    n = ing.ingest(spark, src, out, cfg).n_files
+    ing.ingest(spark, src, out, cfg)
+
+    lineage = spark.read.parquet(out + "_lineage")
+    assert sorted(r.file_id for r in lineage.collect()) == list(range(1, 2 * n + 1))
+    stored = spark.read.parquet(out)
+    assert stored.count() == 2000
+    own = stored.join(
+        lineage,
+        (stored.e_imported_file_id == lineage.file_id)
+        & (stored.e_source_file == lineage.file_path),
+        "left_anti",
+    )
+    assert own.count() == 0
+
+
+def test_incremental_raises_on_unreadable_lineage(spark, xel_dir, tmp_path):
+    """Only a missing lineage means a first load: a lineage that cannot be
+    read fails the run instead of reloading every file."""
+    root, _, _ = xel_dir
+    src = _copy_fixture(root, str(tmp_path / "in"))
+    out = str(tmp_path / "out")
+    ing.ingest(spark, src, out, ing.IngestConfig(write_mode="overwrite"))
+    n = spark.read.parquet(out).count()
+    with open(os.path.join(out + "_lineage", "part-99999-junk.parquet"), "w") as fh:
+        fh.write("not a parquet file")
+
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        ing.ingest_incremental(spark, src, out, ing.IngestConfig())
+    assert spark.read.parquet(out).count() == n
+
+
+def test_load_job_budget(spark, xel_dir, tmp_path):
+    """Job budget of a load: the event files' schema inference, the
+    collected error report (two jobs under AQE), the lineage write, and
+    the lineage broadcast plus the write, the one full read of the input.
+    The incremental load adds the lineage read; with no new file that
+    read is the whole run."""
+    root, _, _ = xel_dir
+    src = _copy_fixture(root, str(tmp_path / "in"))
+    out = str(tmp_path / "out")
+    _, overwrite = _jobs_in_group(
+        spark,
+        "budget_overwrite",
+        lambda: ing.ingest(spark, src, out, ing.IngestConfig(write_mode="overwrite")),
+    )
+    shutil.copy(
+        os.path.join(root, "SessionA_0_132000.parquet"),
+        os.path.join(src, "SessionA_5_132005.parquet"),
+    )
+    _, one_new = _jobs_in_group(
+        spark,
+        "budget_incremental",
+        lambda: ing.ingest_incremental(spark, src, out, ing.IngestConfig()),
+    )
+    _, noop = _jobs_in_group(
+        spark,
+        "budget_noop",
+        lambda: ing.ingest_incremental(spark, src, out, ing.IngestConfig()),
+    )
+    assert (overwrite, one_new, noop) == (6, 7, 1)

@@ -58,7 +58,7 @@ class TestJsonEventsSource:
         good, report = split_by_error_budget(
             df, IngestConfig(max_errors_per_file=2)
         )
-        rep = {r.e_source_file.split("/")[-1]: r for r in report.collect()}
+        rep = {r.e_source_file.split("/")[-1]: r for r in report}
         assert not rep["sess_0_1.json"].aborted  # 1 error < budget 2
         assert rep["sess_0_2.json"].aborted  # 3 errors >= budget
         ids = sorted(r.event_id for r in good.collect())

@@ -2,7 +2,7 @@
 """Optimization measurement harness: plan captures and isolated timings.
 
 Usage:
-  python tools/measure.py plan  <suffix> q1 q2 ...   # capture explain("formatted") → plans/r14/<q>_<suffix>.txt
+  python tools/measure.py plan  <suffix> q1 q2 ...   # capture explain("formatted") → plans/captures/<q>_<suffix>.txt
   python tools/measure.py time  <repeats> q1 q2 ...  # isolated noop-sink timings (min of N), labelled jobs
   python tools/measure.py both  <suffix> q1 q2 ...   # plan + 2-repeat timing
 
@@ -24,9 +24,9 @@ from xeloader_spark.operators.dedup import release_persisted
 from xeloader_spark.plans.inspect import count_exchanges, physical_plan
 from xeloader_spark.session import get_spark
 
-# where `plan` writes its captures (the current round's plans directory)
+# where `plan` writes its captures
 PLANS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "captures"
 )
 
 

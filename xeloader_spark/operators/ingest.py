@@ -18,14 +18,18 @@ Spark design (see module functions for per-stage citations):
   this is strictly better (partition pruning replaces table routing, and
   small event types don't produce tiny tables);
 - micro-batching (S17) is the writer's row-group sizing, not user code;
-- lineage (S23) is a broadcast dimension built from the file list;
-- the error budget (S26) is a per-file aggregate gate, not a per-row
-  try/catch; statistics (S27) come from `observe()` metrics which are
-  retry-safe, unlike raw accumulators.
+- lineage (S23) is a broadcast dimension built from the file list; its
+  ids continue the store's registered ones on every append;
+- the error budget (S26) is a per-file report collected first, from a
+  scan of the file path and `props` only, and then a literal gate on the
+  write (error rows and the collected list of aborted files out), not a
+  per-row try/catch; the write is the only full read of the input;
+  statistics (S27) come from `observe()` metrics which are retry-safe,
+  unlike raw accumulators.
 
 Scale notes: nothing here collects to the driver except the single-row
-stats and the per-file error report (O(#files)); every join against
-lineage is broadcast.
+stats, the lineage table and the per-file error report (all O(#files));
+every join against lineage is broadcast.
 """
 
 from __future__ import annotations
@@ -36,8 +40,10 @@ from collections import Counter
 from dataclasses import dataclass, field, replace
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, Observation, Row, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.timeutil import three_timestamp_projection
 from ..functions.truncation import truncate_string, truncation_flag
@@ -113,6 +119,17 @@ def list_event_files(
 
 
 # --------------------------------------------------------------------- S23
+# the `<store>_lineage` table; declared, so reading it infers nothing
+LINEAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("file_id", T.LongType()),
+        T.StructField("file_folder", T.StringType()),
+        T.StructField("file_name", T.StringType()),
+        T.StructField("file_path", T.StringType()),
+    ]
+)
+
+
 def build_lineage(
     spark: SparkSession, files: list[str], id_offset: int = 0
 ) -> tuple[list[Row], DataFrame]:
@@ -120,31 +137,56 @@ def build_lineage(
     (InputParameters.cs:543-558): one row per listed file with a dense
     surrogate `file_id`. The reference uses an IDENTITY column; here the
     id is `id_offset` + the 1-based position in the sorted listing
-    (`id_offset` lets incremental runs continue the sequence), which is
-    deterministic across retries. Every listed file is registered, also
-    one with no rows, as the reference registers every file it opens.
-    Returns the rows and the same rows as a JVM-local literal frame
-    (`createDataFrame` over Python rows would start Python workers)."""
+    (`id_offset` is the store's largest registered id on an append, so
+    the sequence continues), which is deterministic across retries. Every
+    listed file is registered, also one with no rows, as the reference
+    registers every file it opens. Returns the rows and the same rows as
+    a JVM-local literal frame with `LINEAGE_SCHEMA` (`createDataFrame`
+    over Python rows would start Python workers)."""
     rows = []
     for i, f in enumerate(files, 1):
         folder, name = f.rsplit("/", 1)
         rows.append(
             Row(file_id=id_offset + i, file_folder=folder, file_name=name, file_path=f)
         )
-    structs = [F.struct(*[F.lit(v).alias(k) for k, v in r.asDict().items()]) for r in rows]
+    structs = [
+        F.struct(*[F.lit(r[c.name]).cast(c.dataType).alias(c.name) for c in LINEAGE_SCHEMA])
+        for r in rows
+    ]
     # one partition: a default-sliced range writes an empty lineage file
     frame = spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
-    return rows, frame.withColumn("file_id", F.col("file_id").cast("long"))
+    return rows, frame
+
+
+def registered_files(spark: SparkSession, output_path: str) -> tuple[set[str], int]:
+    """The files the store's lineage registers, and its largest `file_id`
+    (0 when none). The lineage is read with `LINEAGE_SCHEMA`, so no
+    schema-inference job runs, and collected (O(#files)). Only a missing
+    lineage means a first load: any other read failure raises, because a
+    damaged lineage read as empty would reload every file and restart the
+    ids."""
+    try:
+        prev = spark.read.schema(LINEAGE_SCHEMA).parquet(output_path + "_lineage")
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return set(), 0
+    rows = prev.select("file_path", "file_id").collect()
+    return {r.file_path for r in rows}, max((r.file_id for r in rows), default=0)
 
 
 def stamp_lineage(df: DataFrame, lineage: DataFrame) -> DataFrame:
     """Stamp `e_imported_file_id` on every row (EventHolder.cs:105) via a
-    broadcast equi-join on provenance."""
-    return df.join(
-        F.broadcast(lineage.select("file_id", "file_path")),
-        df.e_source_file == F.col("file_path"),
-        "left",
-    ).drop("file_path").withColumnRenamed("file_id", "e_imported_file_id")
+    broadcast equi-join on provenance; `e_source_file` and
+    `e_imported_file_id` lead the columns."""
+    ids = lineage.select(
+        F.col("file_path").alias("e_source_file"),
+        F.col("file_id").alias("e_imported_file_id"),
+    )
+    rest = [c for c in df.columns if c != "e_source_file"]
+    return df.join(F.broadcast(ids), "e_source_file", "left").select(
+        "e_source_file", "e_imported_file_id", *rest
+    )
 
 
 # ----------------------------------------------------------------- S9/S10/S11
@@ -161,12 +203,7 @@ def flatten_events(df: DataFrame, cfg: IngestConfig | None = None) -> DataFrame:
     # Error detection happens on the RAW payload, before truncation — the
     # reference counts errors at extraction time (EventHolder.cs:76-96) and
     # truncates only at store time (EventHolder.cs:273-293).
-    out = out.withColumn(
-        "e_is_error",
-        (F.col("props").isNotNull() & ~F.col("props").rlike(_VALID_PROPS_RE)).cast(
-            "long"
-        ),
-    )
+    out = out.withColumn("e_is_error", payload_error("props"))
     props = F.col("props")
     if cfg.bound_widths:
         out = out.withColumn(
@@ -175,9 +212,7 @@ def flatten_events(df: DataFrame, cfg: IngestConfig | None = None) -> DataFrame:
         props = truncate_string("props", cfg.string_trunc)
     else:
         out = out.withColumn("e_props_truncated", F.lit(0).cast("long"))
-    keep = ["e_imported_file_id"] if "e_imported_file_id" in out.columns else []
     return out.select(
-        *keep,
         "e_time_of_event",
         "e_time_of_event_utc",
         "e_time_of_event_local",
@@ -196,14 +231,29 @@ def flatten_events(df: DataFrame, cfg: IngestConfig | None = None) -> DataFrame:
 _VALID_PROPS_RE = r"^\{.*\}$"
 
 
+def payload_error(col: str) -> Column:
+    """1 when the payload column `col` is present but not a JSON object,
+    else 0: the one per-row error rule of S26 (EventHolder.cs:76-96)."""
+    c = F.col(col)
+    return (c.isNotNull() & ~c.rlike(_VALID_PROPS_RE)).cast("long")
+
+
 def split_by_error_budget(
     df: DataFrame,
     cfg: IngestConfig | None = None,
     file_col: str = "e_source_file",
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row]]:
     """S26 bounded error tolerance (EventHolder.cs:76-96): rows whose
-    payload fails validation count as errors; a file whose error count
-    reaches the budget is aborted. Returns (good_rows, file_report).
+    payload fails validation (`e_is_error`, else `payload_error` of
+    `c_props`) count as errors; a file whose error count reaches the
+    budget is aborted. Returns (good_rows, report_rows).
+
+    The per-file report (`file_col`, `n_rows`, `n_errors`, `aborted`;
+    O(#files) rows) is collected first. It reads only the file column and
+    the error flag, so over a file scan Catalyst prunes its read to those
+    columns. The good rows are then `df` under a literal gate (no error,
+    file not in the collected aborted list): a plan with no aggregate,
+    shuffle or broadcast of its own.
 
     Deviation (documented): the reference aborts *mid-file*, keeping rows
     loaded before the threshold; a declarative engine has no row order
@@ -211,30 +261,19 @@ def split_by_error_budget(
     stricter, deterministic contract.
     """
     cfg = cfg or IngestConfig()
-    if "e_is_error" in df.columns:
-        with_err = df
-    else:
-        is_error = (
-            F.col("c_props").isNotNull() & ~F.col("c_props").rlike(_VALID_PROPS_RE)
-        ).cast("long")
-        with_err = df.withColumn("e_is_error", is_error)
-    per_file = with_err.groupBy(file_col).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("e_is_error").alias("n_errors"),
+    if "e_is_error" not in df.columns:
+        df = df.withColumn("e_is_error", payload_error("c_props"))
+    report = (
+        df.groupBy(file_col)
+        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("e_is_error").alias("n_errors"))
+        .withColumn("aborted", F.col("n_errors") >= cfg.max_errors_per_file)
+        .collect()
     )
-    report = per_file.withColumn(
-        "aborted", (F.col("n_errors") >= cfg.max_errors_per_file)
-    )
-    good = (
-        with_err.join(
-            F.broadcast(report.filter(~F.col("aborted")).select(file_col)),
-            file_col,
-            "inner",
-        )
-        .filter(F.col("e_is_error") == 0)
-        .drop("e_is_error")
-    )
-    return good, report
+    keep = F.col("e_is_error") == 0
+    aborted = [r[file_col] for r in report if r.aborted]
+    if aborted:
+        keep &= ~F.col(file_col).isin(aborted)
+    return df.filter(keep).drop("e_is_error"), report
 
 
 # ------------------------------------------------------------- S8/S17-S21
@@ -325,42 +364,82 @@ def ingest(
     input_path: str | list[str],
     output_path: str,
     cfg: IngestConfig | None = None,
-    file_id_offset: int = 0,
 ) -> IngestReport:
     """End-to-end ingest — entry point A of the reference
-    (Main → ProcessFiles → ProcessOneFile, SURVEY §3.1), one lazy plan
-    over exactly the files `list_event_files` lists:
+    (Main → ProcessFiles → ProcessOneFile, SURVEY §3.1), over exactly the
+    files `list_event_files` lists:
 
-        scan → lineage stamp → flatten(+truncate) → error gate
+        scan(file, props) → per-file error report, collected
+        → lineage write
+        → scan → flatten(+truncate) → literal error gate → lineage stamp
         → observe(stats) → demux write
 
-    The only driver-side materialization is the per-file error report
-    (O(#files))."""
-    cfg = cfg or IngestConfig()
-    files = list_event_files(spark, input_path, cfg)
-    return _load_files(spark, files, output_path, cfg, file_id_offset)
+    Cost model: the listing starts no job; an append reads the store's
+    lineage (O(#files)) to continue its ids; the error report is one
+    column-pruned scan collected to the driver (O(#files)); the write is
+    the only full read of the input, and its plan has no aggregate and no
+    shuffle."""
+    return _load(spark, input_path, output_path, cfg or IngestConfig(), False)
 
 
-def _load_files(
+def ingest_incremental(
     spark: SparkSession,
-    files: list[str],
+    input_path: str,
+    output_path: str,
+    cfg: IngestConfig | None = None,
+) -> IngestReport:
+    """Idempotent incremental load — the tracking table's real job (S23):
+    the reference registers every file in `tbl_ImportedXEventFiles` so an
+    operator can see what's loaded; here that registry actively GATES the
+    next run. Files already present in the lineage table are skipped, so
+    re-running on a growing directory (or after a crash) loads exactly
+    the new files and nothing twice — restart granularity is the file,
+    same as the reference's per-file processing loop. Always an append.
+
+    Cost model: that of `ingest`'s append over the new files only. The
+    candidate list is `list_event_files`, a listing that starts no Spark
+    job and reads no event row; the lineage table (O(#files)) is read
+    with its declared schema and collected, one job; with no new file
+    that is the whole run. Files whose load ABORTED (error budget) are
+    registered, and therefore not retried — matching the reference, which
+    registers the file before loading it; delete its lineage row to force
+    a retry. The same register-then-load order applies to crashes:
+    `ingest` writes the lineage rows before the data, so a file
+    interrupted mid-load shows up registered-but-unloaded and is skipped,
+    never double-appended — deleting its lineage row is the explicit
+    retry path. A lineage that exists but cannot be read raises.
+    """
+    cfg = replace(cfg or IngestConfig(), write_mode="append")
+    return _load(spark, input_path, output_path, cfg, True)
+
+
+def _load(
+    spark: SparkSession,
+    input_path: str | list[str],
     output_path: str,
     cfg: IngestConfig,
-    file_id_offset: int,
+    skip_registered: bool,
 ) -> IngestReport:
-    """`ingest` over an already-decided file list."""
+    """The one load path of `ingest` and `ingest_incremental`: they
+    differ only in whether registered files are skipped."""
+    files = list_event_files(spark, input_path, cfg)
+    loaded, max_id = set(), 0
+    if cfg.write_mode == "append":
+        loaded, max_id = registered_files(spark, output_path)
+    if skip_registered:
+        files = [f for f in files if f not in loaded]
+        if not files:
+            return IngestReport()
     # S4: read the decoded paths, glob metacharacters escaped because the
     # reader globs every path; `input_file_name()` then yields the listed
     # (percent-encoded) URIs again, the lineage join key
     paths = [re.sub(r"([\[\]{}*?\\])", r"\\\1", unquote(f)) for f in files]
     raw = spark.read.parquet(*paths).withColumn("e_source_file", F.input_file_name())
-    lineage_rows, lineage = build_lineage(spark, files, id_offset=file_id_offset)
-    stamped = stamp_lineage(raw, lineage)
-    flat = flatten_events(stamped, cfg)
-    good, file_report = split_by_error_budget(flat, cfg)
+    good, rep_rows = split_by_error_budget(flatten_events(raw, cfg), cfg)
+    lineage_rows, lineage = build_lineage(spark, files, id_offset=max_id)
 
     obs = Observation("ingest_stats")
-    observed = good.observe(
+    observed = stamp_lineage(good, lineage).observe(
         obs,
         F.count(F.lit(1)).alias("n_events"),
         F.sum("e_props_truncated").alias("n_truncated"),
@@ -381,8 +460,6 @@ def _load_files(
 
     demux_write(observed, output_path, cfg)
 
-    rep_rows = file_report.collect()
-
     metrics = obs.get
     return IngestReport(
         n_files=len(lineage_rows),
@@ -393,50 +470,6 @@ def _load_files(
         event_types=int(metrics.get("event_types") or 0),
         lineage=lineage_rows,
     )
-
-
-def ingest_incremental(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    cfg: IngestConfig | None = None,
-) -> IngestReport:
-    """Idempotent incremental load — the tracking table's real job (S23):
-    the reference registers every file in `tbl_ImportedXEventFiles` so an
-    operator can see what's loaded; here that registry actively GATES the
-    next run. Files already present in the lineage table are skipped, so
-    re-running on a growing directory (or after a crash) loads exactly
-    the new files and nothing twice — restart granularity is the file,
-    same as the reference's per-file processing loop.
-
-    Cost model: the candidate list is `list_event_files`, a listing that
-    starts no Spark job and reads no event row; the lineage table
-    (O(#files)) is read and collected to the driver; only the new files'
-    events are read. Files whose load ABORTED (error budget) are registered,
-    and therefore not retried — matching the reference, which registers
-    the file before loading it; delete its lineage row to force a retry.
-    The same register-then-load order applies to crashes: `ingest` writes
-    the lineage rows before the data, so a file interrupted mid-load shows
-    up registered-but-unloaded and is skipped, never double-appended —
-    deleting its lineage row is the explicit retry path.
-    """
-    cfg = cfg or IngestConfig()
-    files = list_event_files(spark, input_path, cfg)
-    lineage_path = output_path + "_lineage"
-    loaded: set[str] = set()
-    max_id = 0
-    try:
-        prev = spark.read.parquet(lineage_path).select("file_path", "file_id")
-        rows = prev.collect()
-        loaded = {r.file_path for r in rows}
-        max_id = max((r.file_id for r in rows), default=0)
-    except Exception:  # no lineage yet — first run
-        pass
-    new_files = [f for f in files if f not in loaded]
-    if not new_files:
-        return IngestReport()
-    inc_cfg = replace(cfg, write_mode="append")  # incremental ⇒ append
-    return _load_files(spark, new_files, output_path, inc_cfg, max_id)
 
 
 def compact_output(
