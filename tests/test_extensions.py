@@ -308,6 +308,20 @@ class TestClusterResolution:
         assert not calls
         dd.release_persisted()
 
+    def test_dedup_clusters_build_jobs(self, spark):
+        """`q_dedup_clusters` builds with only the jobs of its one
+        bounded collect of the pair list (AQE runs the pair pipeline's
+        shuffle stages as jobs of their own): Jaccard counts nothing and
+        the table schema comes from the parquet footer."""
+        from xeloader_spark.queries.dedup import q_dedup_clusters
+        from xeloader_spark.testing import jobs_in_group
+
+        _, n_jobs = jobs_in_group(
+            spark, "dedup_clusters_build", lambda: q_dedup_clusters(spark, SF)
+        )
+        dd.release_persisted()
+        assert n_jobs == 4
+
     def test_components_match_union_find(self, spark, docs):
         pairs = dd.jaccard_pairs(dd.shingles(docs, n=3), threshold=0.3)
         pair_rows = [(r.id_a, r.id_b) for r in pairs.collect()]

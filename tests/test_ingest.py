@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from xeloader_spark.catalog import load_table
 from xeloader_spark.operators import ingest as ing
+from xeloader_spark.testing import jobs_in_group
 
 SF = "/root/testdata/sf0.001"
 
@@ -438,22 +439,11 @@ def test_zero_row_file_registered_once(spark, xel_dir, tmp_path):
     assert spark.read.parquet(out).count() == 1000
 
 
-def _jobs_in_group(spark, group, fn):
-    """`fn()`'s result and the number of Spark jobs it started."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_listing_starts_no_job(spark, xel_dir):
     """The file inventory comes from the listing alone: no Spark job, so
     no event row is read to decide a load's files."""
     root, _, _ = xel_dir
-    files, n_jobs = _jobs_in_group(
+    files, n_jobs = jobs_in_group(
         spark,
         "list_event_files",
         lambda: ing.list_event_files(spark, root, ing.IngestConfig()),
@@ -501,6 +491,39 @@ def test_repeated_append_continues_file_ids(spark, xel_dir, tmp_path):
     assert own.count() == 0
 
 
+def test_truncate_keeps_lineage_of_stored_rows(spark, xel_dir, tmp_path):
+    """A truncate load (`-c`) replaces only the arriving event types, so
+    the stored rows of the other types stay, and so must the lineage rows
+    that name their files: truncate continues the registered ids and
+    appends to the lineage, as an append does."""
+    root, _, _ = xel_dir
+    src = _copy_fixture(root, str(tmp_path / "in"), _FIXTURE_FILES[:2])
+    out = str(tmp_path / "out")
+    ing.ingest(spark, src, out, ing.IngestConfig(write_mode="overwrite"))
+    clicks = str(tmp_path / "clicks")
+    stage = str(tmp_path / "stage")
+    spark.read.parquet(os.path.join(root, _FIXTURE_FILES[2])).filter(
+        F.col("event_type") == "click"
+    ).coalesce(1).write.parquet(stage)
+    part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
+    os.makedirs(clicks)
+    os.rename(os.path.join(stage, part), os.path.join(clicks, _FIXTURE_FILES[2]))
+
+    rep = ing.ingest(spark, clicks, out, ing.IngestConfig(write_mode="truncate"))
+    assert [r.file_id for r in rep.lineage] == [3]
+    lineage = spark.read.parquet(out + "_lineage")
+    assert sorted(r.file_id for r in lineage.collect()) == [1, 2, 3]
+    stored = spark.read.parquet(out)
+    assert {r.event_type for r in stored.select("event_type").distinct().collect()} > {"click"}
+    own = stored.join(
+        lineage,
+        (stored.e_imported_file_id == lineage.file_id)
+        & (stored.e_source_file == lineage.file_path),
+        "left_anti",
+    )
+    assert own.count() == 0
+
+
 def test_incremental_raises_on_unreadable_lineage(spark, xel_dir, tmp_path):
     """Only a missing lineage means a first load: a lineage that cannot be
     read fails the run instead of reloading every file."""
@@ -518,15 +541,15 @@ def test_incremental_raises_on_unreadable_lineage(spark, xel_dir, tmp_path):
 
 
 def test_load_job_budget(spark, xel_dir, tmp_path):
-    """Job budget of a load: the event files' schema inference, the
-    collected error report (two jobs under AQE), the lineage write, and
-    the lineage broadcast plus the write, the one full read of the input.
-    The incremental load adds the lineage read; with no new file that
-    read is the whole run."""
+    """Job budget of a load: the collected error report (two jobs under
+    AQE), the lineage write, and the lineage broadcast plus the write,
+    the one full read of the input. The event schema comes from a file
+    footer, so no inference job runs. The incremental load adds the
+    lineage read; with no new file that read is the whole run."""
     root, _, _ = xel_dir
     src = _copy_fixture(root, str(tmp_path / "in"))
     out = str(tmp_path / "out")
-    _, overwrite = _jobs_in_group(
+    _, overwrite = jobs_in_group(
         spark,
         "budget_overwrite",
         lambda: ing.ingest(spark, src, out, ing.IngestConfig(write_mode="overwrite")),
@@ -535,14 +558,14 @@ def test_load_job_budget(spark, xel_dir, tmp_path):
         os.path.join(root, "SessionA_0_132000.parquet"),
         os.path.join(src, "SessionA_5_132005.parquet"),
     )
-    _, one_new = _jobs_in_group(
+    _, one_new = jobs_in_group(
         spark,
         "budget_incremental",
         lambda: ing.ingest_incremental(spark, src, out, ing.IngestConfig()),
     )
-    _, noop = _jobs_in_group(
+    _, noop = jobs_in_group(
         spark,
         "budget_noop",
         lambda: ing.ingest_incremental(spark, src, out, ing.IngestConfig()),
     )
-    assert (overwrite, one_new, noop) == (6, 7, 1)
+    assert (overwrite, one_new, noop) == (5, 6, 1)

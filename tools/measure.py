@@ -3,11 +3,15 @@
 
 Usage:
   python tools/measure.py plan  <suffix> q1 q2 ...   # capture explain("formatted") → plans/captures/<q>_<suffix>.txt
-  python tools/measure.py time  <repeats> q1 q2 ...  # isolated noop-sink timings (min of N), labelled jobs
+  python tools/measure.py time  <repeats> q1 q2 ...  # isolated noop-sink timings (min of N), labelled jobs,
+                                                     # plus each repeat's build seconds and build jobs
   python tools/measure.py both  <suffix> q1 q2 ...   # plan + 2-repeat timing
 
 Timings use the same methodology as bench.py (noop sink, warm session,
 release_persisted between runs) at $SPARK_GRAFT_SF_DIR (default sf0.1).
+The build phase is the `q_*` call until it returns its DataFrame; its
+jobs (eager counts, collects, checkpoints, AQE stages they trigger) are
+counted under a job group of their own.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from xeloader_spark import queries as q
 from xeloader_spark.operators.dedup import release_persisted
 from xeloader_spark.plans.inspect import count_exchanges, physical_plan
 from xeloader_spark.session import get_spark
+from xeloader_spark.testing import jobs_in_group
 
 # where `plan` writes its captures
 PLANS_DIR = os.path.join(
@@ -67,18 +72,21 @@ def main() -> None:
                 fh.write(plan)
             release_persisted()
         if mode in ("time", "both"):
-            ts = []
-            for _ in range(repeats):
-                spark.sparkContext.setJobDescription(f"measure: {name}")
+            ts, builds = [], []
+            for i in range(repeats):
                 t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                df, build_jobs = jobs_in_group(
+                    spark, f"measure build: {name} #{i}", lambda: fn(spark, sf_dir)
+                )
+                builds.append({"s": round(time.perf_counter() - t0, 3), "jobs": build_jobs})
+                spark.sparkContext.setJobDescription(f"measure: {name}")
+                df.write.format("noop").mode("overwrite").save()
                 ts.append(round(time.perf_counter() - t0, 3))
                 release_persisted()
                 spark.sparkContext.setJobDescription(None)
             row["times"] = ts
             row["min"] = min(ts)
+            row["build"] = builds
         out[name] = row
         print(f"[measure] {name}: {row}", file=sys.stderr, flush=True)
     print(json.dumps(out, indent=1))

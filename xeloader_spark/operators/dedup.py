@@ -412,15 +412,48 @@ def cap_document_frequency(
     )
 
 
+def _sized_shingles(shingle_df: DataFrame) -> DataFrame:
+    """(id, n, shingle): each shingle with the size n of its document's
+    set (a repeated row counts once), from one groupBy on id, so a pair
+    kernel reads both sizes off its joined rows instead of joining a
+    sizes aggregate back twice."""
+    return shingle_df.groupBy("id").agg(F.collect_set("shingle").alias("_s")).select(
+        "id", F.size("_s").cast("long").alias("n"), F.explode("_s").alias("shingle")
+    )
+
+
+def _overlap_pairs(shingle_df: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_a, n_b, n_common) per pair id_a < id_b sharing ≥1
+    shingle: the inverted-index self-join of `_sized_shingles`. Both join
+    sides are one subtree, so one exchange serves both, with no persist."""
+    sized = _sized_shingles(shingle_df)
+    a, b = sized.alias("a"), sized.alias("b")
+    return (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                 F.col("a.n").alias("n_a"), F.col("b.n").alias("n_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
+def _jaccard_at_least(overlap: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, n_common, jaccard) of the (id_a, id_b, n_a, n_b,
+    n_common) pairs whose Jaccard reaches `threshold`."""
+    jaccard = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    return overlap.select("id_a", "id_b", "n_common", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
 def jaccard_pairs(
     shingle_df: DataFrame, threshold: float = 0.5, max_df: int | None = None
 ) -> DataFrame:
     """Near-dup pairs by exact Jaccard over a (id, shingle) set, via
     inverted-index self-join: pairs sharing ≥1 shingle, similarity =
     |∩| / (|A|+|B|-|∩|). Integer arithmetic until the final division —
-    engine-exact. Shuffles on shingle (index build) then on pair (count).
-    The shingle set feeds three consumers (sizes + both join sides) —
-    persisted so the shingling projection runs once.
+    engine-exact. Shuffles on id (set sizes), on shingle (index build,
+    one exchange for both join sides), then on pair (count); no job runs
+    before the frame is returned.
 
     `max_df` (off by default — the oracle-checked exact mode) applies
     `cap_document_frequency` first; sizes and intersections are then both
@@ -428,25 +461,7 @@ def jaccard_pairs(
     consistent (it IS the Jaccard of the capped shingle sets)."""
     if max_df is not None:
         shingle_df = cap_document_frequency(shingle_df, max_df)
-    shingle_df = registered_persist(shingle_df)
-    sizes = shingle_df.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingle_df.alias("a")
-    b = shingle_df.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "jaccard")
-    )
+    return _jaccard_at_least(_overlap_pairs(shingle_df), threshold)
 
 
 def containment_pairs(
@@ -460,35 +475,15 @@ def containment_pairs(
     pipeline wants for quote/expansion chains (Broder's resemblance vs
     containment distinction).
 
-    Same inverted-index shape as `jaccard_pairs` (one shuffle on shingle,
-    one on the undirected pair), then each undirected pair fans out into
-    its two directed verdicts via a single explode — NOT a self-union,
-    which would re-run the whole pair pipeline per direction. Integer
-    counts until the final division, so engine-exact. Emits (id_sub,
-    id_super, n_common, n_sub, containment); `max_df` is the same
-    hot-shingle skew cap."""
+    Same kernel as `jaccard_pairs` (`_overlap_pairs`), then each
+    undirected pair fans out into its two directed verdicts via a single
+    explode — NOT a self-union, which would re-run the whole pair
+    pipeline per direction. Integer counts until the final division, so
+    engine-exact. Emits (id_sub, id_super, n_common, n_sub, containment);
+    `max_df` is the same hot-shingle skew cap."""
     if max_df is not None:
         shingle_df = cap_document_frequency(shingle_df, max_df)
-    shingle_df = registered_persist(shingle_df)
-    sizes = shingle_df.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingle_df.alias("a")
-    b = shingle_df.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-    )
-    # one explode, as documented — a fwd/rev self-UNION consumed the
-    # whole inverted-index pair subtree twice (r13: the code had drifted
-    # to exactly the union the docstring warns against; measured A/B at
-    # sf0.1 before fixing)
-    dirs = common.select(
+    dirs = _overlap_pairs(shingle_df).select(
         F.explode(
             F.array(
                 F.struct(
@@ -625,7 +620,13 @@ def minhash_neardup(
     the candidate set is band-bounded, so the exploded re-join +
     partial-aggregating pair count already beats shuffling whole
     shingle arrays to the pairs. Don't retry while candidates stay
-    bounded."""
+    bounded.
+
+    Second measured NEGATIVE (keep; exploded rows, not the arrays
+    above): verifying over `_sized_shingles`, so the sizes ride the
+    joined rows, is exceptAll-identical but slower: 4.21 vs 3.75 s
+    median, 3/8 interleaved pairs won (sf0.1, 4 cores). Its collect_set
+    reshuffles the persisted shingles; the sizes join-back is broadcast."""
     sh = shingles(df, n=n, text_col=text_col, id_col=id_col)
     if max_df is not None:
         sh = cap_document_frequency(sh, max_df)
@@ -643,15 +644,10 @@ def minhash_neardup(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return (
+    return _jaccard_at_least(
         common.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "jaccard")
+        .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b"),
+        threshold,
     )
 
 
@@ -872,8 +868,10 @@ def connected_components(
     Hybrid execution: the PAIR list is orders of magnitude smaller than
     the corpus (it only names the near-duplicates), so when it fits on
     the driver (≤ `local_threshold` edges) a driver-side union-find
-    replaces the iterative joins — one collect + one createDataFrame
-    instead of iterated Spark jobs. The default gate is 500k edges:
+    replaces the iterative joins — one bounded collect
+    (`limit(local_threshold + 1)`: its length decides the gate, its rows
+    are the edges) + one createDataFrame instead of iterated Spark jobs.
+    The default gate is 500k edges:
     collected `Row` objects cost ~100s of bytes each in Python heap, so
     500k keeps the collect well under ~0.5 GB even for wide string ids —
     safe on a busy shared production driver, not just a quiet sandbox
@@ -902,8 +900,8 @@ def connected_components(
     # The union reads `pairs` twice; persisting it first keeps the
     # (possibly expensive) upstream pair pipeline to a single execution.
     pairs = registered_persist(pairs.select(id_a, id_b))
-    if pairs.count() <= local_threshold:
-        rows = pairs.collect()
+    rows = pairs.limit(local_threshold + 1).collect()
+    if len(rows) <= local_threshold:
         parent: dict = {}
 
         def find(x):

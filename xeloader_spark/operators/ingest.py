@@ -9,8 +9,11 @@ columns, truncate, count errors against a budget → micro-batch bulk-copy
 Spark design (see module functions for per-stage citations):
 - the file inventory comes from the listing: `list_event_files` applies
   the S2/S3 gates to file names, and the scan, lineage and incremental
-  skip all take its one list; per-file parallelism (S24) is Spark's task
-  model; read-ahead (S25) is the columnar reader's own prefetch;
+  skip all take its one list; the scan's schema is declared from the
+  footer of the file Spark's inference would read
+  (`catalog.footer_schema`), so no inference job runs; per-file
+  parallelism (S24) is Spark's task model; read-ahead (S25) is the
+  columnar reader's own prefetch;
 - the whole flatten/transform stage is one declarative projection —
   Catalyst fuses it into a single whole-stage-codegen span over the scan;
 - demux (S8) is `partitionBy("event_type")` on write: one logical table
@@ -19,7 +22,8 @@ Spark design (see module functions for per-stage citations):
   small event types don't produce tiny tables);
 - micro-batching (S17) is the writer's row-group sizing, not user code;
 - lineage (S23) is a broadcast dimension built from the file list; its
-  ids continue the store's registered ones on every append;
+  ids continue the store's registered ones on every append and truncate
+  (both keep stored rows, whose ids must keep naming their files);
 - the error budget (S26) is a per-file report collected first, from a
   scan of the file path and `props` only, and then a literal gate on the
   write (error rows and the collected list of aborted files out), not a
@@ -45,6 +49,7 @@ from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import footer_schema
 from ..functions.timeutil import three_timestamp_projection
 from ..functions.truncation import truncate_string, truncation_flag
 
@@ -137,12 +142,12 @@ def build_lineage(
     (InputParameters.cs:543-558): one row per listed file with a dense
     surrogate `file_id`. The reference uses an IDENTITY column; here the
     id is `id_offset` + the 1-based position in the sorted listing
-    (`id_offset` is the store's largest registered id on an append, so
-    the sequence continues), which is deterministic across retries. Every
-    listed file is registered, also one with no rows, as the reference
-    registers every file it opens. Returns the rows and the same rows as
-    a JVM-local literal frame with `LINEAGE_SCHEMA` (`createDataFrame`
-    over Python rows would start Python workers)."""
+    (`id_offset` is the store's largest registered id on an append or a
+    truncate, so the sequence continues), which is deterministic across
+    retries. Every listed file is registered, also one with no rows, as
+    the reference registers every file it opens. Returns the rows and the
+    same rows as a JVM-local literal frame with `LINEAGE_SCHEMA`
+    (`createDataFrame` over Python rows would start Python workers)."""
     rows = []
     for i, f in enumerate(files, 1):
         folder, name = f.rsplit("/", 1)
@@ -374,11 +379,12 @@ def ingest(
         → scan → flatten(+truncate) → literal error gate → lineage stamp
         → observe(stats) → demux write
 
-    Cost model: the listing starts no job; an append reads the store's
-    lineage (O(#files)) to continue its ids; the error report is one
-    column-pruned scan collected to the driver (O(#files)); the write is
-    the only full read of the input, and its plan has no aggregate and no
-    shuffle."""
+    Cost model: the listing starts no job; the event schema comes from a
+    file footer read on the driver, no job; an append or a truncate reads
+    the store's lineage (O(#files)) to continue its ids; the error report
+    is one column-pruned scan collected to the driver (O(#files)); the
+    write is the only full read of the input, and its plan has no
+    aggregate and no shuffle."""
     return _load(spark, input_path, output_path, cfg or IngestConfig(), False)
 
 
@@ -423,8 +429,10 @@ def _load(
     """The one load path of `ingest` and `ingest_incremental`: they
     differ only in whether registered files are skipped."""
     files = list_event_files(spark, input_path, cfg)
+    # append and truncate keep stored rows, whose lineage rows must stay
+    keeps_rows = cfg.write_mode != "overwrite"
     loaded, max_id = set(), 0
-    if cfg.write_mode == "append":
+    if keeps_rows:
         loaded, max_id = registered_files(spark, output_path)
     if skip_registered:
         files = [f for f in files if f not in loaded]
@@ -434,7 +442,11 @@ def _load(
     # reader globs every path; `input_file_name()` then yields the listed
     # (percent-encoded) URIs again, the lineage join key
     paths = [re.sub(r"([\[\]{}*?\\])", r"\\\1", unquote(f)) for f in files]
-    raw = spark.read.parquet(*paths).withColumn("e_source_file", F.input_file_name())
+    # Spark's (non-merging) inference reads the first file by decoded
+    # path; its footer, read on the driver, declares the same schema
+    schema = footer_schema(spark, min(map(unquote, files)).removeprefix("file:"))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    raw = reader.parquet(*paths).withColumn("e_source_file", F.input_file_name())
     good, rep_rows = split_by_error_budget(flatten_events(raw, cfg), cfg)
     lineage_rows, lineage = build_lineage(spark, files, id_offset=max_id)
 
@@ -454,9 +466,9 @@ def _load(
     # lineage rows to force a retry), matching the reference's handling of
     # aborted files. The failure mode is "missing until retried", never
     # "silently duplicated".
-    lineage.write.mode(
-        "overwrite" if cfg.write_mode != "append" else "append"
-    ).parquet(output_path + "_lineage")
+    lineage.write.mode("append" if keeps_rows else "overwrite").parquet(
+        output_path + "_lineage"
+    )
 
     demux_write(observed, output_path, cfg)
 

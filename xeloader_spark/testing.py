@@ -84,6 +84,18 @@ def compare_frames(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> ParityRes
     return res
 
 
+def jobs_in_group(spark, group: str, fn):
+    """`fn()`'s result and the number of Spark jobs it started, counted
+    under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def check_query(spark, sf_dir: str, name: str, qfn, sql: str | None) -> ParityResult:
     from .plans.inspect import assert_no_global_window
 
