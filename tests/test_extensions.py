@@ -748,21 +748,6 @@ class TestSimilarity:
         for r in rows:
             assert r.rk <= 5 and r.candidate_id != r.query_id
 
-    def test_matmul_equals_join(self, spark, emb):
-        """The int64-matmul kernel must produce bit-identical pairs and
-        cosines to the flat pure-join formulation."""
-        from xeloader_spark.operators import dedup as dd
-
-        a = {
-            (r.id_a, r.id_b): r.cosine
-            for r in dd.embedding_neardup(emb, threshold=0.4, blocked=False).collect()
-        }
-        b = {
-            (r.id_a, r.id_b): r.cosine
-            for r in dd.embedding_neardup_matmul(emb, threshold=0.4).collect()
-        }
-        assert a == b  # exact float equality, not approx
-
     def test_blocked_neardup_subset_with_recall(self, spark, emb):
         """The default LSH-blocked path returns a SUBSET of the flat pairs
         (candidates must share a band) with bit-identical cosines, and at
@@ -799,12 +784,6 @@ class TestSimilarity:
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
         dd.release_persisted()
-
-    def test_matmul_row_cap_fails_loudly(self, spark, emb):
-        from xeloader_spark.operators import dedup as dd
-
-        with pytest.raises(ValueError, match="max_rows"):
-            dd.embedding_neardup_matmul(emb, max_rows=10)
 
     def test_lsh_quantized_matches_bucket_bruteforce(self, spark, emb):
         """Quantized LSH ANN: candidates are exactly the query's signature

@@ -16,6 +16,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 
 from xeloader_spark.operators import cluster as cls
 from xeloader_spark.operators import similarity as sim
@@ -136,3 +137,119 @@ def test_encode_codes_keeps_invalid_rows_with_null_codes(corpora):
     assert {
         i: v for i, v in out["hostile"].items() if i not in BAD
     } == out["clean"]
+
+
+def test_lsh_banded_skips_invalid_queries_and_candidates(corpora):
+    hostile, clean = corpora
+    got = _rows(sim.lsh_ann_topk_banded(hostile, QUERIES, k=5))
+    want = _rows(sim.lsh_ann_topk_banded(clean, QUERIES, k=5))
+    assert got == want and want
+    assert not {q for q, c, *_ in got} & BAD
+    assert not {c for q, c, *_ in got} & BAD
+
+
+def _graph_ann_embeddings(spark, tmp_path):
+    """The graph_ann benchmark's embeddings (1200 × 64, clustered)."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
+    import gen
+
+    gen.write_embeddings(2301, str(tmp_path), 1200)
+    return spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+
+
+def test_driver_band_codes_equal_kernel(spark, tmp_path):
+    """The query side's driver band codes equal the corpus kernel's
+    signatures for every vector, so querying with any id collides with
+    exactly the buckets the corpus-filtered query side did."""
+    emb = _graph_ann_embeddings(spark, tmp_path)
+    ids = [r.vec_id for r in emb.select("vec_id").collect()]
+    driver = sim._query_bands(emb, ids, 8, 4, "vec_id", "embedding", 1000, 42, 64)
+    kernel = sim.banded_quantized_signatures(emb, 8, 4).select(
+        F.col("id").alias("query_id"),
+        F.col("qarr").alias("q_qarr"),
+        F.col("band").alias("q_band"),
+        F.col("bsig").alias("q_bsig"),
+    )
+    assert driver.schema == kernel.schema
+    assert driver.count() == 8 * len(ids)
+    assert driver.exceptAll(kernel).isEmpty() and kernel.exceptAll(driver).isEmpty()
+
+
+# --------------------------------------------------------- local_frame
+# every schema a `local_frame` call site declares
+_SCHEMAS = [
+    "round long, vec_id long, dist_at_selection long",
+    "query_id long, cluster int",
+    "query_id long, q_qarr array<bigint>",
+    "query_id long, q_qarr array<bigint>, q_band int not null, q_bsig long",
+    "node bigint, cluster bigint",
+    "node int, cluster int",
+    "node string, cluster string",
+    "_gr_pid int, _gr_offset long",
+    "_gs_pid int, _gs_offset long",
+    "list_id long, centroid array<double>",
+    "merge_round int, left_sym string, right_sym string, n long",
+    "n_orders long, orders_orphans long, n_lineitem long,"
+    " lineitem_orphans long, n_customer long, customer_orphans long",
+    "check_name string, n_violations long, passed boolean",
+    "n_true long, n_cand long, n_cand_true long",
+    "n_true long, n_pass1 long, n_multipass long",
+    "warc_file string, warc_blob string",
+    "host string, prefix string, allow boolean",
+    "phrase string",
+    "query_id bigint",
+    "host string, robots_txt string",
+]
+
+
+def _value(dtype, i: int):
+    from pyspark.sql import types as T
+
+    if isinstance(dtype, T.ArrayType):
+        if isinstance(dtype.elementType, T.LongType):
+            return [2**40, None, -i]
+        return [0.5 * i, None, -1e300]
+    return {
+        T.LongType: 2**40 + i,
+        T.IntegerType: -i,
+        T.StringType: f"s{i}é",
+        T.BooleanType: i % 2 == 0,
+    }[type(dtype)]
+
+
+@pytest.mark.parametrize("schema", _SCHEMAS + ["lineage"])
+@pytest.mark.parametrize("shape", ["values_and_nulls", "empty"])
+def test_local_frame_equals_list_frame(spark, schema, shape):
+    from pyspark.sql.types import _parse_datatype_string
+
+    from xeloader_spark.operators.ingest import LINEAGE_SCHEMA
+    from xeloader_spark.operators.kernels import local_frame
+
+    st = LINEAGE_SCHEMA if schema == "lineage" else _parse_datatype_string(schema)
+    rows = []
+    if shape != "empty":
+        rows = [tuple(_value(f.dataType, i) for f in st.fields) for i in range(3)]
+        rows.append(tuple(None if f.nullable else 0 for f in st.fields))
+    spec = LINEAGE_SCHEMA if schema == "lineage" else schema
+    got, want = local_frame(spark, rows, spec), spark.createDataFrame(rows, spec)
+    assert got.schema == want.schema
+    assert [f.nullable for f in got.schema] == [f.nullable for f in want.schema]
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+    assert got._jdf.queryExecution().analyzed().getClass().getSimpleName() == (
+        "LocalRelation"
+    )
+
+
+def test_local_frame_centroids_keep_inferred_types(spark):
+    """The IVF centroid frame used to be inferred from Python values; its
+    declared schema is exactly what inference gave."""
+    from xeloader_spark.operators.kernels import local_frame
+
+    rows = [(0, [0.25, -1.0]), (1, [3.0, 0.0])]
+    inferred = spark.createDataFrame(rows, ["list_id", "centroid"])
+    got = local_frame(spark, rows, "list_id long, centroid array<double>")
+    assert got.schema == inferred.schema
+    assert got.collect() == inferred.collect()

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.truncate import release_persisted  # noqa: F401  (re-export)
-from .kernels import int_matrix, quantize_sql
+from .kernels import int_matrix, local_frame, quantize_sql
 from .similarity import _dot_sql as _sim_dot_sql
 from .similarity import _sq_dist_sql as _sim_sq_dist_sql
 
@@ -324,8 +324,8 @@ def kcenter_select(
         picked.append((r, pid, top.d))
         vecs.append(list(q.filter(F.col("id") == pid).first().qarr))
     q.unpersist()
-    return emb_df.sparkSession.createDataFrame(
-        picked, "round long, vec_id long, dist_at_selection long"
+    return local_frame(
+        emb_df.sparkSession, picked, "round long, vec_id long, dist_at_selection long"
     )
 
 
@@ -864,10 +864,9 @@ def ivf_topk_exact(
         )[:n_probe]
         probes.extend((qid, j) for _, j in d)
     spark = emb_df.sparkSession
-    probe_df = spark.createDataFrame(probes, "query_id long, cluster int")
-    qarr_df = spark.createDataFrame(
-        [(qid, arr) for qid, arr in qrows.items()],
-        "query_id long, q_qarr array<bigint>",
+    probe_df = local_frame(spark, probes, "query_id long, cluster int")
+    qarr_df = local_frame(
+        spark, list(qrows.items()), "query_id long, q_qarr array<bigint>"
     )
 
     cands = (
@@ -1003,7 +1002,7 @@ def ivfpq_topk(
         )[:n_probe]
         probes.extend((qid, j) for _, j in d)
     spark = emb_df.sparkSession
-    probe_df = spark.createDataFrame(probes, "query_id long, cluster int")
+    probe_df = local_frame(spark, probes, "query_id long, cluster int")
 
     # candidates = probed lists only; encode THOSE rows ONCE EACH,
     # BEFORE attaching queries. Several queries probe the same cluster,

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..plans.truncate import registered_persist, round_truncate
 from ..plans.truncate import release_persisted  # noqa: F401  (re-export)
-from .kernels import quantize_sql
+from .kernels import local_frame, quantize_sql
 
 TOKEN_SPLIT_RE = r"\s+"  # for the F.split python API
 TOKEN_SPLIT_RE_SQL = r"\\s+"  # for patterns embedded in F.expr SQL literals
@@ -870,7 +870,9 @@ def connected_components(
     the driver (≤ `local_threshold` edges) a driver-side union-find
     replaces the iterative joins — one bounded collect
     (`limit(local_threshold + 1)`: its length decides the gate, its rows
-    are the edges) + one createDataFrame instead of iterated Spark jobs.
+    are the edges) + one `kernels.local_frame` of the labels (a JVM
+    `LocalRelation`: no Python task ships them) instead of iterated Spark
+    jobs.
     The default gate is 500k edges:
     collected `Row` objects cost ~100s of bytes each in Python heap, so
     500k keeps the collect well under ~0.5 GB even for wide string ids —
@@ -919,7 +921,8 @@ def connected_components(
                 parent[max(ra, rb)] = min(ra, rb)
         id_type = pairs.schema[id_a].dataType.simpleString()
         nodes = {n for row in rows for n in (row[0], row[1])}
-        return pairs.sparkSession.createDataFrame(
+        return local_frame(
+            pairs.sparkSession,
             sorted((n, find(n)) for n in nodes),
             f"node {id_type}, cluster {id_type}",
         )
@@ -1073,75 +1076,6 @@ def hamming_neardup(
 
 
 # -------------------------------------------------- embedding near-dup
-def embedding_neardup_matmul(
-    emb_df: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-    max_rows: int = 1_000_000,
-) -> DataFrame:
-    """Exact embedding near-dup via blocked integer matrix multiply: the
-    quantized corpus matrix is broadcast (numpy int64), and each partition
-    of the probe side computes its block of A·Bᵀ vectorized in C.
-
-    Same integers as `embedding_neardup` (int64 matmul is exact;
-    quantization replicates SQL round-half-away-from-zero), so oracle
-    results are identical — this is the fast kernel for the
-    corpus-fits-in-broadcast case ONLY. It collects the corpus to the
-    driver to build the broadcast block, so it fails loudly past
-    `max_rows` (default 10⁶) rather than silently becoming a driver-side
-    bottleneck; past that, use `embedding_neardup` (blocked LSH default —
-    no driver collect) or run this kernel per LSH bucket. Measured ~8×
-    faster than the join formulation at 2k×64.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = emb_df.sparkSession
-    n_rows = emb_df.count()
-    if n_rows > max_rows:
-        raise ValueError(
-            f"embedding_neardup_matmul: corpus has {n_rows} rows > "
-            f"max_rows={max_rows}; this kernel builds its broadcast block "
-            "on the driver. Use embedding_neardup(blocked=True) at scale, "
-            "or raise max_rows explicitly if the driver can hold the matrix."
-        )
-    pdf = emb_df.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64) * scale
-    Q = np.trunc(M + np.copysign(0.5, M)).astype(np.int64)  # HALF_UP, both engines
-    norms = (Q * Q).sum(axis=1)
-    bc = spark.sparkContext.broadcast((ids, Q, norms))
-
-    def block(batches):
-        b_ids, b_Q, b_norms = bc.value
-        for pdf_a in batches:
-            a_ids = pdf_a["id"].to_numpy()
-            a_idx = pdf_a["idx"].to_numpy()
-            dots = b_Q[a_idx] @ b_Q.T  # int64-exact
-            # replicate the oracle's float op order exactly:
-            # dot / (sqrt(n_a) * sqrt(n_b)) — NOT sqrt(n_a * n_b)
-            sq = np.sqrt(b_norms.astype(np.float64))
-            cos = dots / (sq[a_idx][:, None] * sq[None, :])
-            ai, bi = np.nonzero((cos >= threshold) & (a_ids[:, None] < b_ids[None, :]))
-            yield pd.DataFrame(
-                {
-                    "id_a": a_ids[ai],
-                    "id_b": b_ids[bi],
-                    "cosine": cos[ai, bi],
-                }
-            )
-
-    par = max(spark.sparkContext.defaultParallelism, 8)
-    probe = spark.createDataFrame(
-        pd.DataFrame({"id": ids, "idx": range(len(ids))})
-    ).repartition(par)
-    return probe.mapInPandas(
-        block, schema="id_a long, id_b long, cosine double"
-    )
-
-
 def embedding_neardup(
     emb_df: DataFrame,
     threshold: float = 0.45,

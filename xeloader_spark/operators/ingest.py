@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 from ..catalog import footer_schema
 from ..functions.timeutil import three_timestamp_projection
 from ..functions.truncation import truncate_string, truncation_flag
+from .kernels import local_frame
 
 
 @dataclass
@@ -146,21 +147,19 @@ def build_lineage(
     truncate, so the sequence continues), which is deterministic across
     retries. Every listed file is registered, also one with no rows, as
     the reference registers every file it opens. Returns the rows and the
-    same rows as a JVM-local literal frame with `LINEAGE_SCHEMA`
-    (`createDataFrame` over Python rows would start Python workers)."""
+    same rows as a `kernels.local_frame` with `LINEAGE_SCHEMA`: one Arrow
+    table, so a many-file load makes no py4j call per field and per file
+    (a literal frame's `lit`/cast/alias/struct) and analyzes no literal
+    plan of one struct per file."""
     rows = []
     for i, f in enumerate(files, 1):
         folder, name = f.rsplit("/", 1)
         rows.append(
             Row(file_id=id_offset + i, file_folder=folder, file_name=name, file_path=f)
         )
-    structs = [
-        F.struct(*[F.lit(r[c.name]).cast(c.dataType).alias(c.name) for c in LINEAGE_SCHEMA])
-        for r in rows
-    ]
-    # one partition: a default-sliced range writes an empty lineage file
-    frame = spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
-    return rows, frame
+    # one partition: a local relation slices into up to defaultParallelism
+    # tasks, and each would write its own lineage file
+    return rows, local_frame(spark, rows, LINEAGE_SCHEMA).coalesce(1)
 
 
 def registered_files(spark: SparkSession, output_path: str) -> tuple[set[str], int]:

@@ -15,6 +15,14 @@ component is *invalid*. `int_matrix` zero-fills its row so the batch
 matmul stays one vectorized call, and each kernel masks that row's
 outputs (NULL, or no output row), so an invalid row never changes any
 valid row's result.
+
+The driver side of the boundary is `local_frame`: rows the driver
+already holds (union-find labels, rank offsets, probe lists, query-side
+band codes, literal fixtures) become a JVM `LocalRelation` through one
+Arrow table. The list form of `createDataFrame` would pickle the rows
+and re-serialize them in a Python task per slice, starting Python
+workers just to ship rows the driver holds;
+`tests/test_local_frame_lint.py` keeps every driver frame on this path.
 """
 
 from __future__ import annotations
@@ -74,3 +82,22 @@ def int_matrix(arr, dim: int):
     m = np.zeros((n, dim), dtype=np.int64)
     m[valid] = flat[offs[:-1][valid, None] + np.arange(dim)]
     return m, valid
+
+
+def local_frame(spark, rows, schema):
+    """`rows` (tuples or `Row`s) as a DataFrame with `schema` (a DDL
+    string or a `StructType`), built as a JVM `LocalRelation` from one
+    Arrow table: no pickling and no Python task. Types and nullability
+    are the ones the list form of `createDataFrame` gives."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

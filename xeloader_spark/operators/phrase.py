@@ -84,9 +84,12 @@ def phrase_match(
     post = build_postings(df, text_col=text_col, id_col=id_col)
     # dedupe the phrase table first (r9 review): a duplicated phrase row
     # doubles every offset witness, so counts hit 2·n_terms at true
-    # matches (dropped) and n_terms at half-matches (false positives)
+    # matches (dropped) and n_terms at half-matches (false positives).
+    # The phrase side is query-set-sized and broadcast, so it is deduped
+    # in one partition: no shuffle of its own before the broadcast
     pterms = (
         phrases.select(F.col(phrase_col).alias("phrase"))
+        .coalesce(1)
         .distinct()
         .select(
             "phrase",

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.truncate import registered_local_checkpoint
+from .kernels import local_frame
 
 
 def global_row_number(
@@ -118,7 +119,7 @@ def _global_rank_with_total(
     for pid, cnt in counts:
         offsets.append((pid, acc))
         acc += cnt
-    offset_df = spark.createDataFrame(offsets, "_gr_pid int, _gr_offset long")
+    offset_df = local_frame(spark, offsets, "_gr_pid int, _gr_offset long")
     out = (
         local.join(F.broadcast(offset_df), "_gr_pid")
         .withColumn(out_col, (F.col("_gr_local") + F.col("_gr_offset")).cast("long"))
@@ -182,7 +183,7 @@ def global_running_sum(
     for pid, s in totals:
         offsets.append((pid, acc))
         acc += int(s)
-    offset_df = spark.createDataFrame(offsets, "_gs_pid int, _gs_offset long")
+    offset_df = local_frame(spark, offsets, "_gs_pid int, _gs_offset long")
     return (
         local.join(F.broadcast(offset_df), "_gs_pid")
         .withColumn(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..plans.truncate import registered_local_checkpoint
-from .kernels import int_matrix, quantize_sql
+from .kernels import int_matrix, local_frame, quantize_sql
 
 
 def dot_topk_quantized(
@@ -216,7 +216,7 @@ def ivf_topk(
     # centroid table (tiny) → per-query probe lists by centroid distance
     centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
     spark = emb_df.sparkSession
-    cdf = spark.createDataFrame(centroids, ["list_id", "centroid"])
+    cdf = local_frame(spark, centroids, "list_id long, centroid array<double>")
     queries = assigned.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"), F.col("arr").alias("q_arr")
     )
@@ -349,6 +349,27 @@ def _signed_sum_sql(arr: str, signs: list[int]) -> str:
     return " ".join(parts)
 
 
+def _sign_matrix(n_planes: int, seed: int, dim: int):
+    """(dim × n_planes) int64 matrix of the `_plane_signs` ±1 signs,
+    contiguous for the projection matmul."""
+    import numpy as np
+
+    signs = [_plane_signs(p, seed, dim) for p in range(n_planes)]
+    return np.array(signs, dtype=np.int64).T.copy()
+
+
+def _band_codes(qm, signs, planes_per_band: int):
+    """(n × bands) int64 band codes of an n × dim quantized matrix: bit p
+    of band b is `proj >= 0` on global plane b·planes_per_band + p, the
+    int64-exact projection of the SQL form."""
+    import numpy as np
+
+    bits = (qm @ signs >= 0).astype(np.int64)
+    weights = 1 << np.arange(planes_per_band, dtype=np.int64)
+    bands = signs.shape[1] // planes_per_band
+    return (bits.reshape(len(qm), bands, planes_per_band) * weights).sum(2)
+
+
 def _band_sigs(
     emb_df: DataFrame,
     bands: int,
@@ -383,18 +404,13 @@ def _band_sigs(
     )
     if dim is None:
         dim = _vec_dim(emb_df, vec_col) or 0
-    S = np.array(
-        [_plane_signs(p, seed, dim) for p in range(bands * planes_per_band)],
-        dtype=np.int64,
-    ).T.copy()  # (dim × planes), contiguous for the matmul
-    weights = 1 << np.arange(planes_per_band, dtype=np.int64)
+    S = _sign_matrix(bands * planes_per_band, seed, dim)
 
     def batches(it):
         for b in it:
             qm, valid = int_matrix(b.column("qarr"), dim)
             n = len(valid)
-            bits = (qm @ S >= 0).astype(np.int64)  # int64-exact projection
-            bsig = (bits.reshape(n, bands, planes_per_band) * weights).sum(2)
+            bsig = _band_codes(qm, S, planes_per_band)
             lst = pa.ListArray.from_arrays(
                 pa.array(np.arange(0, (n + 1) * bands, bands, dtype=np.int32)),
                 pa.array(bsig.reshape(-1), pa.int64()),
@@ -532,6 +548,41 @@ def banded_quantized_signatures(
     )
 
 
+def _query_bands(
+    emb_df: DataFrame, query_ids: list[int], bands: int, planes_per_band: int,
+    id_col: str, vec_col: str, scale: int, seed: int, dim: int,
+) -> DataFrame:
+    """(query_id, q_qarr, q_band, q_bsig): `banded_quantized_signatures`
+    of the query rows, computed on the driver. The quantized rows are
+    collected (a JVM job, no Python task), decoded by `int_matrix` (an
+    invalid vector gets no rows) and coded by `_band_codes`, the batch
+    kernel's own function; the result is a `local_frame`."""
+    qrows = (
+        emb_df.select(
+            F.col(id_col).alias("id"),
+            F.expr(quantize_sql(vec_col, scale)).alias("qarr"),
+        )
+        .filter(F.col("id").isin(query_ids))
+        .toArrow()
+    )
+    qm, valid = int_matrix(qrows.column("qarr"), dim)
+    qm = qm[valid]
+    signs = _sign_matrix(bands * planes_per_band, seed, dim)
+    qids = qrows.column("id").to_numpy(zero_copy_only=False)[valid]
+    rows = [
+        (qid, qarr, band, code)
+        for qid, qarr, codes in zip(
+            qids.tolist(), qm.tolist(), _band_codes(qm, signs, planes_per_band).tolist()
+        )
+        for band, code in enumerate(codes)
+    ]
+    return local_frame(
+        emb_df.sparkSession,
+        rows,
+        "query_id long, q_qarr array<bigint>, q_band int not null, q_bsig long",
+    )
+
+
 def lsh_ann_topk_banded(
     emb_df: DataFrame,
     query_ids: list[int],
@@ -556,22 +607,26 @@ def lsh_ann_topk_banded(
     so the full pipeline — banding, collision set, dot, rank — replays in
     the DuckDB oracle.
 
+    The query side never enters Python: `_query_bands` collects the
+    query rows (one JVM job, as `dot_topk_quantized` does) and codes them
+    on the driver, so the corpus crosses the Arrow boundary once per
+    query; filtering the corpus signatures for the query side would read
+    it twice.
+
     Measured NEGATIVE (keep): computing the query side's signatures from
     `emb_df.filter(id in query_ids)` instead of filtering the corpus
     signatures measured flat (1.50 s vs 1.59 s, 10 reps, graph_ann
-    perfbench inputs, 4 cores), so both sides keep one signature pass."""
-    dim = _vec_dim(emb_df, vec_col)
+    perfbench inputs, 4 cores): that filter still ran a Python pass of
+    its own."""
+    dim = _vec_dim(emb_df, vec_col) or 0
     sigs = banded_quantized_signatures(
         emb_df, bands, planes_per_band, id_col, vec_col, scale, seed,
         dim=dim,
     )
+    # query-set sized: `bands` rows per valid query
     queries = F.broadcast(
-        sigs.filter(F.col("id").isin(query_ids)).select(
-            F.col("id").alias("query_id"),
-            F.col("qarr").alias("q_qarr"),
-            F.col("band").alias("q_band"),
-            F.col("bsig").alias("q_bsig"),
-        )
+        _query_bands(emb_df, query_ids, bands, planes_per_band, id_col,
+                     vec_col, scale, seed, dim)
     )
     hits = (
         sigs.join(

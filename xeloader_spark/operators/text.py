@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..plans.truncate import registered_local_checkpoint, round_truncate
+from .kernels import local_frame
 
 # Marker stopwords per language for the n-gram-free heuristic language ID.
 # Deliberately tiny: language ID here is a deterministic scoring operator,
@@ -1374,8 +1375,8 @@ def bpe_train(
             # registry frees the local blocks at release_persisted()
             segs = round_truncate(segs, checkpoint_dir)
     seg0.unpersist()
-    return spark.createDataFrame(
-        merges, "merge_round int, left_sym string, right_sym string, n long"
+    return local_frame(
+        spark, merges, "merge_round int, left_sym string, right_sym string, n long"
     )
 
 

@@ -30,6 +30,7 @@ from ..operators.links import (
     href_value_sql,
     resolve_href_sql,
 )
+from ..operators.kernels import local_frame
 from ..operators.robots import DUCK_D, robots_exprs, robots_filter
 from .text import _ROBOTS_RULES, _SRC_HOST
 
@@ -647,6 +648,13 @@ def _robots_txt_files() -> list[tuple[str, str]]:
     return files
 
 
+def _robots_files(spark: SparkSession) -> DataFrame:
+    """The fixture robots.txt files as a (host, robots_txt) frame."""
+    return local_frame(
+        spark, _robots_txt_files(), "host string, robots_txt string"
+    )
+
+
 def q_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """robots.txt files parsed to the rules table
     (`operators/robots.parse_robots_txt`) — RFC 9309 group semantics
@@ -659,10 +667,7 @@ def q_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit-frame windows."""
     from ..operators.robots import parse_robots_txt
 
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    return parse_robots_txt(files, agent=_ROBOTS_AGENT)
+    return parse_robots_txt(_robots_files(spark), agent=_ROBOTS_AGENT)
 
 
 def _robots_parse_sql() -> str:
@@ -691,10 +696,7 @@ def q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared key/value templates."""
     from ..operators.robots import robots_sitemaps
 
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    return robots_sitemaps(files)
+    return robots_sitemaps(_robots_files(spark))
 
 
 def _robots_sitemaps_sql() -> str:
@@ -746,10 +748,7 @@ def q_robots_crawl_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     still get its delay, and the silent host must be absent."""
     from ..operators.robots import robots_crawl_delay
 
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    return robots_crawl_delay(files, agent=_ROBOTS_AGENT)
+    return robots_crawl_delay(_robots_files(spark), agent=_ROBOTS_AGENT)
 
 
 def _robots_crawl_delay_sql() -> str:
@@ -792,10 +791,7 @@ def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"concat('https://', {_SRC_HOST}, '/articles/', "
         "CAST(doc_id % 50 AS STRING)) AS url",
     ).distinct()
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    delays = robots_crawl_delay(files, agent=_ROBOTS_AGENT)
+    delays = robots_crawl_delay(_robots_files(spark), agent=_ROBOTS_AGENT)
     return fetch_schedule(
         frontier, delays, default_delay=_DEFAULT_CRAWL_DELAY
     )
@@ -893,10 +889,7 @@ def q_priority_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier = parse_sitemap(sm).select(
         "host", F.col("loc").alias("url"), "priority"
     )
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    delays = robots_crawl_delay(files, agent=_ROBOTS_AGENT)
+    delays = robots_crawl_delay(_robots_files(spark), agent=_ROBOTS_AGENT)
     return fetch_schedule(
         frontier,
         delays,
@@ -1430,10 +1423,7 @@ def q_feasible_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.expr("CAST(COUNT(*) + SUM(doc_id % 97) AS BIGINT)").alias("weight")
     )
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    delays = robots_crawl_delay(files, agent=_ROBOTS_AGENT)
+    delays = robots_crawl_delay(_robots_files(spark), agent=_ROBOTS_AGENT)
     hosts = (
         w.join(
             delays.select(
@@ -1676,10 +1666,7 @@ def q_crawl_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("host", "url", F.lit("cadence").alias("reason"))
     )
     frontier = evidence.unionByName(due).transform(registered_local_checkpoint)
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    delays = robots_crawl_delay(files, agent=_ROBOTS_AGENT).transform(
+    delays = robots_crawl_delay(_robots_files(spark), agent=_ROBOTS_AGENT).transform(
         registered_local_checkpoint
     )
     hosts = (
@@ -2013,10 +2000,7 @@ def q_trap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = scored.filter("NOT is_trap").withColumn(
         "pri", F.expr("CAST(-trap_score AS DOUBLE)")
     )
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    delays = robots_crawl_delay(files, agent=_ROBOTS_AGENT)
+    delays = robots_crawl_delay(_robots_files(spark), agent=_ROBOTS_AGENT)
     sched = fetch_schedule(
         kept, delays, default_delay=_DEFAULT_CRAWL_DELAY, priority_col="pri"
     )
@@ -2155,10 +2139,7 @@ def q_host_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     bk = host_backoff(log, retry_after_col="retry_after")
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    delays = robots_crawl_delay(files, agent=_ROBOTS_AGENT)
+    delays = robots_crawl_delay(_robots_files(spark), agent=_ROBOTS_AGENT)
     return (
         bk.join(
             delays.select(F.col("host").alias("_dh"), "crawl_delay"),
@@ -2504,10 +2485,7 @@ def _adaptive_eff(spark: SparkSession, docs: DataFrame) -> DataFrame:
     bk = host_backoff(flog, retry_after_col="retry_after").select(
         "host", "backoff_factor", "retry_after_s"
     )
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
-    delays = robots_crawl_delay(files, agent=_ROBOTS_AGENT)
+    delays = robots_crawl_delay(_robots_files(spark), agent=_ROBOTS_AGENT)
     return (
         usable.join(
             delays.select(F.col("host").alias("_dh"), "crawl_delay"),
@@ -2838,9 +2816,7 @@ def q_discovery_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.robots import robots_crawl_delay, robots_sitemaps
 
-    files = spark.createDataFrame(
-        _robots_txt_files(), "host string, robots_txt string"
-    )
+    files = _robots_files(spark)
     sm = robots_sitemaps(files).select("sitemap_url")
 
     docs = load_table(spark, sf_dir, "documents")

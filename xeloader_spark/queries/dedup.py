@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import dedup as dd
+from ..operators.kernels import local_frame
 from ..plans.truncate import registered_persist
 
 _K = 12
@@ -292,8 +293,8 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         # also free frames other callers still read
         for df in (sh, true_pairs, cands):
             df.unpersist()
-    out = spark.createDataFrame(
-        [(n_true, n_cand, n_hit)],
+    out = local_frame(
+        spark, [(n_true, n_cand, n_hit)],
         "n_true long, n_cand long, n_cand_true long",
     )
     return out.select(
@@ -1501,8 +1502,8 @@ def q_snm_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_multi = multi.count()
     finally:
         p1.unpersist()  # this build's own frame only (see q_dedup_eval)
-    out = spark.createDataFrame(
-        [(n_true, n_p1, n_multi)],
+    out = local_frame(
+        spark, [(n_true, n_p1, n_multi)],
         "n_true long, n_pass1 long, n_multipass long",
     )
     return out.select(

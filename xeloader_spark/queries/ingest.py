@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.callstack import callstack_debugcmd_expr
+from ..operators.kernels import local_frame
 
 _FNAME = "concat('SessionA_', CAST(user_id % 4 AS STRING), '_13200', CAST(user_id % 4 AS STRING), '.parquet')"
 _FNAME_DUCK = "concat('SessionA_', CAST(user_id % 4 AS VARCHAR), '_13200', CAST(user_id % 4 AS VARCHAR), '.parquet')"
@@ -542,8 +543,8 @@ def q_warc_reader_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     rd = read_warc(spark, os.path.join(base, "plain"))
     rz = read_warc_gz(spark, os.path.join(base, "gz"))
     blob_df = parse_warc(
-        spark.createDataFrame(
-            list(blobs.items()), "warc_file string, warc_blob string"
+        local_frame(
+            spark, list(blobs.items()), "warc_file string, warc_blob string"
         )
     )
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.kernels import local_frame
 
 _DEC = "decimal(25,6)"
 
@@ -399,8 +400,8 @@ def q_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orph = orphans(orders, "o_custkey", customer, "c_custkey")
     l_orph = orphans(lineitem, "l_orderkey", orders, "o_orderkey")
     c_orph = orphans(customer, "c_nationkey", nation, "n_nationkey")
-    out = spark.createDataFrame(
-        [(n_orders, o_orph, n_lineitem, l_orph, n_customer, c_orph)],
+    out = local_frame(
+        spark, [(n_orders, o_orph, n_lineitem, l_orph, n_customer, c_orph)],
         "n_orders long, orders_orphans long, n_lineitem long,"
         " lineitem_orphans long, n_customer long, customer_orphans long",
     )
@@ -583,8 +584,8 @@ def q_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("event_type_domain", bad_type),
         ("orders_fk_customer", orphans),
     ]
-    return spark.createDataFrame(
-        [(name, int(n), n == 0) for name, n in rows],
+    return local_frame(
+        spark, [(name, int(n), n == 0) for name, n in rows],
         "check_name string, n_violations long, passed boolean",
     )
 

@@ -25,6 +25,7 @@ from ..catalog import load_table
 from ..operators import cluster as cls
 from ..operators import multimodal as mm
 from ..operators import similarity as sim
+from ..operators.kernels import local_frame
 
 _QUERY_IDS = [0, 1, 2, 3, 4]
 _K = 5
@@ -2277,8 +2278,8 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # LEFT join from the query-id spine so a dim with ZERO surviving
         # overlap still shows a recall-0 row (the reading that matters)
-        spine = spark.createDataFrame(
-            [(qid,) for qid in _QUERY_IDS], "query_id bigint"
+        spine = local_frame(
+            spark, [(qid,) for qid in _QUERY_IDS], "query_id bigint"
         )
         hits = spine.join(hits, "query_id", "left").select(
             "query_id",

@@ -8,6 +8,7 @@ from ..plans.truncate import registered_local_checkpoint
 
 from ..catalog import load_table
 from ..operators import text as tx
+from ..operators.kernels import local_frame
 from ..operators.text import BPE_ISH_RE, LANG_MARKERS
 
 
@@ -633,8 +634,8 @@ def q_robots_filter_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "url", F.expr(_URL_SEED_SPARK)
     )
-    rules_df = spark.createDataFrame(
-        _ROBOTS_RULES, "host string, prefix string, allow boolean"
+    rules_df = local_frame(
+        spark, _ROBOTS_RULES, "host string, prefix string, allow boolean"
     )
     return robots_filter_table(docs, rules_df).select(
         "doc_id", "url", "host", "path", "matched_len", "allowed"
@@ -2866,9 +2867,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.phrase import phrase_match
 
     docs = load_table(spark, sf_dir, "documents")
-    phrases = spark.createDataFrame(
-        [(p,) for p in _PHRASES], "phrase string"
-    )
+    phrases = local_frame(spark, [(p,) for p in _PHRASES], "phrase string")
     return phrase_match(docs, phrases)
 
 
@@ -2913,9 +2912,7 @@ def q_phrase_index_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     post = build_postings(docs)
-    pt = spark.createDataFrame(
-        [(p,) for p in _PHRASES], "phrase string"
-    ).select(
+    pt = local_frame(spark, [(p,) for p in _PHRASES], "phrase string").select(
         "phrase",
         F.posexplode(F.expr(TOKENS_SPARK.format(c="phrase"))).alias(
             "off", "term"
