@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from xeloader_spark.catalog import load_table
 from xeloader_spark.operators import dedup as dd
+from xeloader_spark.operators import minhash
 from xeloader_spark.operators import multimodal as mm
 from xeloader_spark.operators import similarity as sim
 from xeloader_spark.operators import text as tx
@@ -158,9 +159,7 @@ class TestMinhashIncrementalReingest:
         # or (b) fan every candidate row out into duplicates through the
         # match_sigs union seeing the id twice.
         base = docs.limit(6).select("doc_id", "text")
-        snap_sigs = dd.minhash_signatures(
-            dd.shingles(base, n=3).withColumnRenamed("shingle", "tok"), k=12
-        )
+        snap_sigs = minhash.signatures(dd.shingles(base, n=3), k=12)
         # new batch = two re-ingested snapshot docs + one genuinely new
         # doc that duplicates a snapshot doc's text under a fresh id
         reingested = base.limit(2)

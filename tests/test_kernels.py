@@ -13,6 +13,11 @@ so the corpus always starts with a full-width row or the NULL row.
 
 from __future__ import annotations
 
+import os
+import pathlib
+import subprocess
+import sys
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -253,3 +258,42 @@ def test_local_frame_centroids_keep_inferred_types(spark):
     got = local_frame(spark, rows, "list_id long, centroid array<double>")
     assert got.schema == inferred.schema
     assert got.collect() == inferred.collect()
+
+
+_NO_PYTHONPATH_DRIVER = """
+import sys
+sys.path.insert(0, {repo!r})
+from xeloader_spark.operators.kernels import local_frame
+from xeloader_spark.operators.similarity import dot_topk_quantized
+from xeloader_spark.session import get_spark
+
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+emb = local_frame(
+    spark,
+    [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0])],
+    "vec_id long, embedding array<double>",
+)
+print(len(dot_topk_quantized(emb, [0], k=2).collect()))
+spark.stop()
+"""
+
+
+def test_workers_import_package_without_pythonpath(tmp_path):
+    """A driver that found the package through `sys.path` alone, running
+    from a directory outside the repo with PYTHONPATH unset, still runs
+    a Python-worker kernel: `get_spark` puts the package's parent
+    directory on the workers' path."""
+    repo = str(pathlib.Path(__file__).resolve().parent.parent)
+    script = tmp_path / "driver.py"
+    script.write_text(_NO_PYTHONPATH_DRIVER.format(repo=repo))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[-1] == "2"

@@ -1013,6 +1013,7 @@ def test_streaming_minhash_neardup_matches_batch(spark, tmp_path):
     import time
 
     from xeloader_spark.operators import dedup as dd
+    from xeloader_spark.operators import minhash
     from xeloader_spark.operators import sampling as sp
     from xeloader_spark.streaming.minhash_stream import (
         streaming_minhash_neardup,
@@ -1064,9 +1065,7 @@ def test_streaming_minhash_neardup_matches_batch(spark, tmp_path):
         for r in emitted.collect()
         if r.new_id in new_ids
     }
-    snap_sigs = dd.minhash_signatures(
-        dd.shingles(snap_df, n=3).withColumnRenamed("shingle", "tok"), k=12
-    )
+    snap_sigs = minhash.signatures(dd.shingles(snap_df, n=3), k=12)
     exp = {
         (r.new_id, r.match_id, r.in_snapshot, r.n_agree)
         for r in dd.minhash_incremental(

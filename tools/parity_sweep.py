@@ -63,7 +63,7 @@ def main() -> int:
                   f"{results[name]['detail']}", flush=True)
     spark.stop()
     git_head = subprocess.run(
-        ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
+        ["git", "-C", REPO, "describe", "--always", "--dirty", "--abbrev=7"],
         capture_output=True, text=True,
     ).stdout.strip()
     artifact = {

@@ -7,7 +7,9 @@ collect) so each scales to 100 TB-class corpora:
 - shingle Jaccard: token n-gram inverted-index join (selective even on
   shared-vocabulary corpora where unigram Jaccard saturates);
 - MinHash + LSH: k min-hash signatures, banded bucket join for candidate
-  pairs, exact-Jaccard verification of candidates only;
+  pairs, exact-Jaccard verification of candidates only (the batch, search
+  and incremental operators live here; the signature, band-key and
+  agreement format they share lives in `minhash.py`);
 - SimHash: bit-vote signature + blocked Hamming join;
 - embedding near-dup: quantized-integer cosine pairs (exact, engine-
   deterministic; see similarity.py for the float/ANN path).
@@ -33,9 +35,10 @@ from pyspark.sql import functions as F
 from ..plans.truncate import registered_persist, round_truncate
 from ..plans.truncate import release_persisted  # noqa: F401  (re-export)
 from .kernels import local_frame, quantize_sql
+from .minhash import agreement, band_keys, signatures
+from .text import _tok_array, ngram_array_sql
 
 TOKEN_SPLIT_RE = r"\s+"  # for the F.split python API
-TOKEN_SPLIT_RE_SQL = r"\\s+"  # for patterns embedded in F.expr SQL literals
 
 def tokenize(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(id, ord, tok) — positional tokens, whitespace split, JVM-side."""
@@ -55,53 +58,13 @@ def shingles(
     first: higher-order functions run interpreted (outside codegen), so
     inlining the split into every size()/slice() reference re-splits the
     text several times per row — measured 5× slower at sf0.1."""
-    toks = f"filter(split({text_col}, '{TOKEN_SPLIT_RE_SQL}'), x -> x != '')"
-    # NB sequence(0, -1) in Spark is a *descending* sequence, so documents
-    # shorter than n tokens need an explicit empty-array branch.
-    sh = (
-        f"CASE WHEN size(_toks) < {n} THEN array() "
-        f"ELSE transform(sequence(0, size(_toks) - {n}), "
-        f"i -> array_join(slice(_toks, i + 1, {n}), ' ')) END"
-    )
     return (
-        df.select(F.col(id_col).alias("id"), F.expr(toks).alias("_toks"))
-        .select("id", F.explode(F.expr(sh)).alias("shingle"))
+        df.select(
+            F.col(id_col).alias("id"), F.expr(_tok_array(text_col)).alias("_toks")
+        )
+        .select("id", F.explode(F.expr(ngram_array_sql("_toks", n))).alias("shingle"))
         .distinct()
     )
-
-
-def minhash_sigs_rowwise(
-    df: DataFrame,
-    n: int = 3,
-    k: int = 12,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signature per document computed ENTIRELY per row — same
-    values as `shingles` → `minhash_signatures` (array_min over the same
-    md5 halves; duplicates don't move a min, so skipping the distinct is
-    value-neutral) but with zero shuffles and no aggregate, which is what
-    a STREAMING pipeline needs: each doc arrives whole in one row, so its
-    signature is a projection, not a groupBy (streaming aggregations
-    would demand watermarks and forbid append mode downstream).
-    Returns (id, h0..h{k-1})."""
-    toks = f"filter(split({text_col}, '{TOKEN_SPLIT_RE_SQL}'), x -> x != '')"
-    sh = (
-        f"CASE WHEN size(_toks) < {n} THEN array() "
-        f"ELSE transform(sequence(0, size(_toks) - {n}), "
-        f"i -> array_join(slice(_toks, i + 1, {n}), ' ')) END"
-    )
-    base = df.select(
-        F.col(id_col).alias("id"), F.expr(toks).alias("_toks")
-    ).select("id", F.expr(sh).alias("_sh"))
-    sig_cols = [
-        F.expr(
-            f"array_min(transform(_sh, x -> "
-            f"substr(md5('{s // 2}|' || x), {1 + 16 * (s % 2)}, 16)))"
-        ).alias(f"h{s}")
-        for s in range(k)
-    ]
-    return base.select("id", *sig_cols)
 
 
 def exact_dedup(
@@ -213,7 +176,7 @@ def chunk_documents(
     corpus_tokens / chunk_tokens, never per-pair. The empty-doc guard
     matters: sequence(0, -1) in Spark is DESCENDING, not empty."""
     k = int(chunk_tokens)
-    toks = f"filter(split({text_col}, '{TOKEN_SPLIT_RE_SQL}'), x -> x != '')"
+    toks = _tok_array(text_col)
     chunks = (
         f"CASE WHEN size(_toks) = 0 THEN array() "
         f"ELSE transform(sequence(0, CAST(ceil(size(_toks) / {k}.0) AS INT) - 1), "
@@ -302,12 +265,8 @@ def substring_dup_spans(
     partitioning. Hot boilerplate hashes cost O(df) join rows here (no
     pair space — contrast `jaccard_pairs`), so no df cap is needed."""
     n = int(min_tokens)
-    toks = f"filter(split({text_col}, '{TOKEN_SPLIT_RE_SQL}'), x -> x != '')"
-    grams = (
-        f"CASE WHEN size(_toks) < {n} THEN array() "
-        f"ELSE transform(sequence(0, size(_toks) - {n}), "
-        f"i -> md5(array_join(slice(_toks, i + 1, {n}), ' '))) END"
-    )
+    toks = _tok_array(text_col)
+    grams = ngram_array_sql("_toks", n, "md5({})")
     g = (
         df.select(
             F.col(id_col).alias("doc_id"), F.expr(toks).alias("_toks")
@@ -508,58 +467,6 @@ def containment_pairs(
     )
 
 
-def minhash_signatures(
-    token_df: DataFrame, k: int = 12
-) -> DataFrame:
-    """k-permutation MinHash signature per id over a (id, tok) token
-    set. Hash family: md5(j||'|'||tok) split into its two 16-hex-char
-    halves — each 64-bit half is an independent-enough permutation, so k
-    signatures cost ⌈k/2⌉ md5 evaluations. The digests are materialized
-    in a projection BEFORE the aggregate (interpreted agg expressions
-    don't CSE — inline they'd be computed once per substring reference).
-    Fixed-width lowercase hex compares lexicographically = numerically,
-    so MIN over the hex string is MIN over the 64-bit value, and the
-    DuckDB oracle replays it exactly. One shuffle on id.
-
-    No distinct on the way in: MIN is duplicate-insensitive, so the
-    signature is identical whether or not (id, tok) repeats — and every
-    caller in this repo feeds `shingles()` output, which is already
-    distinct, so the distinct this used to do was a full second shuffle
-    of already-unique rows for nothing (r13: removing it cut one
-    Exchange from every minhash pipeline). Duplicate input rows only
-    cost their own md5 evaluations, never a changed value.
-
-    Measured NEGATIVE (r13, keep): a mapInArrow + hashlib variant with
-    per-batch partial mins (value-identical, verified exceptAll-empty)
-    timed 1.09–1.13 s vs 0.85–0.89 s for this md5 fold over the cached
-    sf0.1 shingle frame (interleaved A/B, min-of-3 × 2 rounds) — the
-    codegen'd JVM md5 + map-side partial MIN already beats the Python
-    boundary, so don't retry the Arrow form here.
-
-    Second measured NEGATIVE (r13, keep): MIN(string) plans as
-    SortAggregate (variable-width buffers aren't hash-aggregable); an
-    order-isomorphic signed-long encoding of each hex half
-    ((conv(hi8)−2³¹)·2³² + conv(lo8), hex'd back after the agg) yields
-    pure HashAggregate and identical output, but measured ~35% SLOWER
-    over the cached sf0.1 shingle frame (0.557 → 0.774 s interleaved
-    min-of-4) — 24 conv() parses per row cost more than the id-sort
-    they remove. Re-measure before adopting at much larger
-    rows-per-partition."""
-    n_md5 = (k + 1) // 2
-    dt = token_df.select("id", "tok")
-    for j in range(n_md5):
-        dt = dt.withColumn(
-            f"_m{j}", F.md5(F.concat(F.lit(f"{j}|"), F.col("tok")))
-        )
-    aggs = [
-        F.min(
-            F.substring(F.col(f"_m{s // 2}"), 1 + 16 * (s % 2), 16)
-        ).alias(f"h{s}")
-        for s in range(k)
-    ]
-    return dt.groupBy("id").agg(*aggs)
-
-
 def lsh_candidate_pairs(
     sigs: DataFrame, bands: int = 4, rows: int = 3
 ) -> DataFrame:
@@ -567,14 +474,7 @@ def lsh_candidate_pairs(
     candidates. Bands are melted to long form (`stack`) so ONE self-join
     on (band_idx, band_key) covers all bands — one shuffle instead of one
     per band. Bucket sizes — not corpus size — bound the pair fan-out."""
-    banded = sigs
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows + r}") for r in range(rows)]
-        banded = banded.withColumn(f"band{b}", F.md5(F.concat_ws("#", *cols)))
-    stack = ", ".join(f"{b}, band{b}" for b in range(bands))
-    long = banded.selectExpr(
-        "id", f"stack({bands}, {stack}) AS (band_idx, bk)"
-    )
+    long = band_keys(sigs, bands, rows)
     a = long.select(F.col("id").alias("id_a"), "band_idx", "bk")
     b_ = long.select(F.col("id").alias("id_b"), "band_idx", "bk")
     return (
@@ -631,8 +531,7 @@ def minhash_neardup(
     if max_df is not None:
         sh = cap_document_frequency(sh, max_df)
     sh = registered_persist(sh)
-    sh_tok = sh.withColumnRenamed("shingle", "tok")
-    sigs = registered_persist(minhash_signatures(sh_tok, k=k))
+    sigs = registered_persist(signatures(sh, k=k))
     cands = lsh_candidate_pairs(sigs, bands=bands, rows=rows)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     common = (
@@ -750,12 +649,8 @@ def bloom_decontaminate(
     one = words.crossJoin(
         ev.agg(F.sort_array(F.collect_set("shingle")).alias("egrams"))
     )
-    toks = f"filter(split({text_col}, '{TOKEN_SPLIT_RE_SQL}'), x -> x != '')"
-    gr = (
-        f"CASE WHEN size(_toks) < {n} THEN array() "
-        f"ELSE array_distinct(transform(sequence(0, size(_toks) - {n}), "
-        f"i -> array_join(slice(_toks, i + 1, {n}), ' '))) END"
-    )
+    toks = _tok_array(text_col)
+    gr = f"array_distinct({ngram_array_sql('_toks', n)})"
     hit = " AND ".join(
         f"(coalesce(element_at(wmap, CAST(({p}) DIV 64 AS INT)), CAST(0 AS BIGINT))"
         f" & shiftleft(CAST(1 AS BIGINT), CAST(({p}) % 64 AS INT))) != 0"
@@ -1225,15 +1120,8 @@ def minhash_search(
     from pyspark.sql import Window
 
     sh = shingles(df, n=n, text_col=text_col, id_col=id_col)
-    sigs = registered_persist(
-        minhash_signatures(sh.withColumnRenamed("shingle", "tok"), k=k)
-    )
-    banded = sigs
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows + r}") for r in range(rows)]
-        banded = banded.withColumn(f"band{b}", F.md5(F.concat_ws("#", *cols)))
-    stack = ", ".join(f"{b}, band{b}" for b in range(bands))
-    long = banded.selectExpr("id", f"stack({bands}, {stack}) AS (band_idx, bk)")
+    sigs = registered_persist(signatures(sh, k=k))
+    long = band_keys(sigs, bands, rows)
     qlong = long.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"), "band_idx", "bk"
     )
@@ -1249,18 +1137,10 @@ def minhash_search(
             *[F.col(f"h{s}").alias(f"qh{s}") for s in range(k)],
         )
     )
-    agree = sum(
-        F.when(F.col(f"h{s}") == F.col(f"qh{s}"), 1).otherwise(0)
-        for s in range(k)
-    )
     scored = (
         cands.join(sigs.withColumnRenamed("id", "candidate_id"), "candidate_id")
         .join(qsigs, "query_id")
-        .select(
-            "query_id",
-            "candidate_id",
-            agree.cast("long").alias("n_agree"),
-        )
+        .select("query_id", "candidate_id", agreement(k, "h", "qh"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("n_agree").desc(), F.col("candidate_id")
@@ -1307,24 +1187,8 @@ def minhash_incremental(
     signatures; document text never crosses the wire. The estimate-only
     verify is the point: it is what makes dedup possible after the
     original text has been discarded."""
-    from pyspark.sql import functions as F
-
     sh = shingles(new_df, n=n, text_col=text_col, id_col=id_col)
-    new_sigs = registered_persist(
-        minhash_signatures(sh.withColumnRenamed("shingle", "tok"), k=k)
-    )
-
-    def band_long(sigs: DataFrame) -> DataFrame:
-        banded = sigs
-        for b in range(bands):
-            cols = [F.col(f"h{b * rows + r}") for r in range(rows)]
-            banded = banded.withColumn(
-                f"band{b}", F.md5(F.concat_ws("#", *cols))
-            )
-        stack = ", ".join(f"{b}, band{b}" for b in range(bands))
-        return banded.selectExpr(
-            "id", f"stack({bands}, {stack}) AS (band_idx, bk)"
-        )
+    new_sigs = registered_persist(signatures(sh, k=k))
 
     # A re-ingested id (present in both the batch and the snapshot) is
     # handled by the WITHIN-batch path only: anti-joining it out of the
@@ -1335,8 +1199,8 @@ def minhash_incremental(
     # batch's signature wins. No-op when ids are disjoint (the normal
     # daily-crawl contract).
     snapshot_only = snapshot_sigs.join(new_sigs.select("id"), "id", "left_anti")
-    new_long = band_long(new_sigs)
-    snap_long = band_long(snapshot_only)
+    new_long = band_keys(new_sigs, bands, rows)
+    snap_long = band_keys(snapshot_only, bands, rows)
     cross = (
         snap_long.join(F.broadcast(new_long.withColumnRenamed("id", "new_id")),
                        ["band_idx", "bk"])
@@ -1355,10 +1219,6 @@ def minhash_incremental(
     )
     cands = cross.unionByName(within)
     match_sigs = snapshot_only.unionByName(new_sigs)
-    agree = sum(
-        F.when(F.col(f"h{s}") == F.col(f"nh{s}"), 1).otherwise(0)
-        for s in range(k)
-    )
     return (
         cands.join(
             new_sigs.select(
@@ -1368,12 +1228,7 @@ def minhash_incremental(
             "new_id",
         )
         .join(match_sigs.withColumnRenamed("id", "match_id"), "match_id")
-        .select(
-            "new_id",
-            "match_id",
-            "in_snapshot",
-            agree.cast("long").alias("n_agree"),
-        )
+        .select("new_id", "match_id", "in_snapshot", agreement(k, "h", "nh"))
         .filter(F.col("n_agree") >= min_agree)
         .withColumn("jaccard_est", F.col("n_agree") / F.lit(k))
     )
@@ -1439,10 +1294,7 @@ def editdistance_neardup(
     `boilerplate_prefix` and strip or cap them first, the `max_df`
     discipline of the shingle families."""
     blk = F.md5(
-        F.expr(
-            f"array_join(slice(filter(split({text_col}, '\\\\s+'), "
-            f"x -> x != ''), 1, {block_tokens}), ' ')"
-        )
+        F.expr(f"array_join(slice({_tok_array(text_col)}, 1, {block_tokens}), ' ')")
     )
     slim = df.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("t"), blk.alias("blk")
@@ -1688,12 +1540,8 @@ def sorted_neighborhood_pairs(
     multi-pass SNM with a second key is the standard mitigation."""
     from .rank import global_row_number
 
-    toks = f"filter(split({text_col}, '{TOKEN_SPLIT_RE_SQL}'), x -> x != '')"
-    sh = (
-        f"CASE WHEN size(_toks) < {shingle_n} THEN array() "
-        f"ELSE array_distinct(transform(sequence(0, size(_toks) - {shingle_n}), "
-        f"i -> array_join(slice(_toks, i + 1, {shingle_n}), ' '))) END"
-    )
+    toks = _tok_array(text_col)
+    sh = f"array_distinct({ngram_array_sql('_toks', shingle_n)})"
     # key_sql (over the `_toks` array) overrides the default
     # first-`key_tokens` prefix key — multi-pass SNM sorts each pass by a
     # DIFFERENT key so pairs missed in one order meet in another

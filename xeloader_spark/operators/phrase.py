@@ -47,9 +47,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# whitespace-normalized token array; the Spark literal needs the
-# double-escaped \\s (Spark SQL string literals process C escapes)
-TOKENS_SPARK = "filter(split(lower({c}), '\\\\s+'), x -> x != '')"
+from .text import _tok_array
+
+# lowercased whitespace token array (a template over {c})
+TOKENS_SPARK = _tok_array("lower({c})")
 TOKENS_DUCK = (
     "list_filter(regexp_split_to_array(lower({c}), '\\s+'), x -> x != '')"
 )

@@ -32,7 +32,25 @@ BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def _tok_array(text_col: str) -> str:
+    """The engine's one tokenizer: whitespace split, empty tokens dropped
+    (SQL text; the Spark literal needs the double-escaped \\s)."""
     return f"filter(split({text_col}, '\\\\s+'), x -> x != '')"
+
+
+def ngram_array_sql(toks: str, n: int, elem: str = "{}") -> str:
+    """Word n-grams of the token array `toks` as one SQL array, in
+    position order, duplicates kept (wrap in `array_distinct` for a set).
+    `toks` should be a column bound in its own projection: higher-order
+    functions run interpreted, so an inline split would re-tokenize the
+    text once per reference. `elem` is a branch-free template applied to
+    each space-joined gram, e.g. ``md5({})``. Documents shorter than `n`
+    tokens give the empty array: sequence(0, -1) in Spark is descending,
+    not empty."""
+    gram = elem.format(f"array_join(slice({toks}, i + 1, {n}), ' ')")
+    return (
+        f"CASE WHEN size({toks}) < {n} THEN array() "
+        f"ELSE transform(sequence(0, size({toks}) - {n}), i -> {gram}) END"
+    )
 
 
 def simpson_stats_sql(arr_sql: str) -> str:
@@ -154,15 +172,9 @@ def repetition_stats(df: DataFrame, n: int = 3, text_col: str = "text") -> DataF
     quality filters key on. Entirely array-side (one narrow projection,
     no explode, no shuffle); the token array is materialized once so the
     interpreted higher-order functions don't re-split the text."""
-    toks = _tok_array(text_col)
-    sh = (
-        f"CASE WHEN size(_toks) < {n} THEN array() "
-        f"ELSE transform(sequence(0, size(_toks) - {n}), "
-        f"i -> array_join(slice(_toks, i + 1, {n}), ' ')) END"
-    )
     return (
-        df.withColumn("_toks", F.expr(toks))
-        .withColumn("_sh", F.expr(sh))
+        df.withColumn("_toks", F.expr(_tok_array(text_col)))
+        .withColumn("_sh", F.expr(ngram_array_sql("_toks", n)))
         .withColumn("n_ngrams", F.expr("size(_sh)").cast("long"))
         .withColumn("n_distinct_ngrams", F.expr("size(array_distinct(_sh))").cast("long"))
         .withColumn(
@@ -1178,11 +1190,7 @@ def rolling_fingerprint(df: DataFrame, text_col: str = "text", n: int = 5) -> Da
     # split used to re-tokenize the document once per window reference
     # (the winnowing/bm25_passages defect, r13). Same expressions over
     # the bound array, same values.
-    sh = (
-        f"CASE WHEN size(_rt) < {n} THEN array() "
-        f"ELSE transform(sequence(0, size(_rt) - {n}), "
-        f"i -> md5(array_join(slice(_rt, i + 1, {n}), ' '))) END"
-    )
+    sh = ngram_array_sql("_rt", n, "md5({})")
     return df.withColumn(
         "rolling_fp",
         F.expr(
@@ -1231,11 +1239,8 @@ def winnowing_fingerprints(
     # instead of 3×/2×. Same expressions over the same values —
     # bit-identical output, oracle untouched. Note
     # least(size(_h) − j, w) ≡ size(slice(_h, j+1, w)) = size(s).
-    hashes = (
-        f"CASE WHEN size(_t) < {k} THEN array() "
-        f"ELSE transform(sequence(0, size(_t) - {k}), "
-        f"i -> CAST(conv(substr(md5(array_join("
-        f"slice(_t, i + 1, {k}), ' ')), 1, 15), 16, 10) AS BIGINT)) END"
+    hashes = ngram_array_sql(
+        "_t", k, "CAST(conv(substr(md5({}), 1, 15), 16, 10) AS BIGINT)"
     )
     # window j covers hashes[j .. j+wlen-1]; rightmost min via the
     # first position of the min in the REVERSED slice

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import dedup as dd
+from ..operators import minhash
 from ..operators.kernels import local_frame
 from ..plans.truncate import registered_persist
 
@@ -279,9 +280,7 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .persist()
     )
-    sigs = dd.minhash_signatures(
-        sh.withColumnRenamed("shingle", "tok"), k=_K
-    )
+    sigs = minhash.signatures(sh, k=_K)
     cands = dd.lsh_candidate_pairs(sigs, bands=_BANDS, rows=_ROWS).persist()
     try:
         n_true = true_pairs.count()
@@ -509,9 +508,8 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
     )
     in_snap = sp.hash_bucket("doc_id", salt=_MH_SNAP_SALT) < _SNAP_BUCKET
-    snap_sh = dd.shingles(seeded.filter(in_snap), n=3)
-    snapshot_sigs = dd.minhash_signatures(
-        snap_sh.withColumnRenamed("shingle", "tok"), k=_K
+    snapshot_sigs = minhash.signatures(
+        dd.shingles(seeded.filter(in_snap), n=3), k=_K
     )
     return dd.minhash_incremental(
         seeded.filter(~in_snap),

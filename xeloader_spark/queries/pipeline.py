@@ -165,11 +165,10 @@ def q_training_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).otherwise(F.col("text")),
     )
-    tk = f"filter(split(text, '\\\\s+'), x -> x != '')"
     base = seeded.select(
         "doc_id",
         "source",
-        F.expr(tk).alias("tk"),
+        F.expr(tx._tok_array("text")).alias("tk"),
     ).select(
         "doc_id",
         "source",
@@ -205,9 +204,7 @@ def q_training_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("clean"),
     ).withColumn(
         "n_tokens",
-        F.expr(
-            "CAST(size(filter(split(clean, '\\\\s+'), x -> x != '')) AS BIGINT)"
-        ),
+        F.expr(f"CAST(size({tx._tok_array('clean')}) AS BIGINT)"),
     )
     kw = Window.partitionBy(F.md5("clean")).orderBy("doc_id")
     keeper = stripped.withColumn("rn", F.row_number().over(kw))

@@ -14,6 +14,11 @@ from ..plans.truncate import registered_local_checkpoint
 
 from ..catalog import load_table
 from ..operators import sampling as sp
+from ..operators.text import _tok_array
+
+# whitespace token count of a document, the length every packing and
+# budget query works in
+_N_TOKENS = f"CAST(size({_tok_array('text')}) AS BIGINT)"
 
 _STRATA = {"src0": 0.8, "src1": 0.5, "src2": 0.25}
 _DEFAULT_FRAC = 0.05
@@ -117,9 +122,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.expr(
-            "CAST(size(filter(split(text, '\\\\s+'), x -> x != '')) AS BIGINT)"
-        ).alias("n_tokens"),
+        F.expr(_N_TOKENS).alias("n_tokens"),
     ).withColumn(
         "weight", F.least(F.lit(1.0), F.col("n_tokens") / F.lit(_W_CAP_TOKENS))
     )
@@ -135,9 +138,7 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.expr(
-            "CAST(size(filter(split(text, '\\\\s+'), x -> x != '')) AS BIGINT)"
-        ).alias("n_tokens"),
+        F.expr(_N_TOKENS).alias("n_tokens"),
     )
     return (
         sp.shard_by_tokens(
@@ -160,9 +161,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.expr(
-            "CAST(size(filter(split(text, '\\\\s+'), x -> x != '')) AS BIGINT)"
-        ).alias("n_tokens"),
+        F.expr(_N_TOKENS).alias("n_tokens"),
     )
     return sp.pack_sequences(
         toks, "n_tokens", budget=512, part_col="source", order_col="doc_id"
@@ -191,14 +190,12 @@ def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus shuffle is the per-group selection window. End-to-end
     engine-exact: integer token counts, decimal weight accumulator,
     IEEE double division, floor to integer budgets."""
-    from ..operators import text as tx
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         "lang",
         "source",
-        F.expr(f"CAST(size({tx._tok_array('text')}) AS BIGINT)").alias("n_tokens"),
+        F.expr(_N_TOKENS).alias("n_tokens"),
     )
     grp = (
         toks.groupBy("lang", "source")
@@ -234,12 +231,10 @@ def q_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     length buckets, each bucket is cut into 16-doc batches in (tokens,
     doc_id) order, and every batch reports its pad length and padding
     waste — integer window arithmetic end-to-end, engine-exact."""
-    from ..operators import text as tx
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.expr(f"CAST(size({tx._tok_array('text')}) AS BIGINT)").alias("n_tokens"),
+        F.expr(_N_TOKENS).alias("n_tokens"),
     )
     return sp.length_bucket_batches(
         toks, "n_tokens", "doc_id", bucket_width=_BUCKET_W, batch_size=_BATCH_SZ
@@ -276,7 +271,7 @@ def quantile_normalize_docs(docs: DataFrame) -> DataFrame:
     shared with `tools/scale_stress.py` so the replication stress
     measures exactly the production pipeline."""
     from ..operators.rank import global_row_number
-    from ..operators.text import _tok_array, simpson_stats_sql
+    from ..operators.text import simpson_stats_sql
     from pyspark.sql import Window
 
     toks = _tok_array("text")
@@ -608,9 +603,7 @@ def q_packing_boundary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.expr(
-            "CAST(size(filter(split(text, '\\\\s+'), x -> x != '')) AS BIGINT)"
-        ).alias("n_tokens"),
+        F.expr(_N_TOKENS).alias("n_tokens"),
     )
     packed = sp.pack_sequences(
         toks, "n_tokens", budget=_PACK_B, part_col="source", order_col="doc_id"
@@ -701,7 +694,7 @@ def q_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window) and a 1-row N broadcast. Rank rows are
     slim (doc_id, score); text never rides the rank shuffle."""
     from ..operators.rank import global_row_number
-    from ..operators.text import _tok_array, unigram_doc_score
+    from ..operators.text import unigram_doc_score
 
     docs = load_table(spark, sf_dir, "documents")
     toks = _tok_array("text")
@@ -810,7 +803,7 @@ def q_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly ⌊n/2⌋ candidate pairs per bucket."""
     from pyspark.sql import Window
 
-    from ..operators.text import _tok_array, simpson_stats_sql
+    from ..operators.text import simpson_stats_sql
 
     docs = load_table(spark, sf_dir, "documents")
     toks = _tok_array("text")

@@ -22,6 +22,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # maxBytesPerBatch (64 MB default) still caps wide rows by bytes.
 ARROW_RECORDS_PER_BATCH = 65536
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "xeloader-spark",
@@ -50,6 +52,14 @@ def get_spark(
     # stages. Workers inherit the driver env — set before they spawn.
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+
+    # The mapInArrow kernels pickle this package's functions by reference,
+    # so Python workers must import it even when the driver found it
+    # through sys.path alone: put its parent directory on their path,
+    # ahead of any PYTHONPATH already set.
+    worker_path = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -99,6 +109,7 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -3,8 +3,9 @@
 The streaming twin of `operators.dedup.minhash_incremental`: the
 historical corpus exists only as retained MinHash state, here sharded as
 one state row-set per LSH band bucket. Each arriving document's
-signature is a per-row PROJECTION (`minhash_sigs_rowwise` — a streaming
-pipeline cannot afford a per-doc aggregate), its band keys route it to
+signature is a per-row PROJECTION (`minhash.row_signatures` — a
+streaming pipeline cannot afford a per-doc aggregate; documents without a
+shingle get no row), its `minhash.band_keys` route it to
 `bands` buckets, and within each bucket the stateful stitcher emits a
 candidate pair against every earlier member, scored by exact signature
 agreement — the same estimate-only verify the batch operator uses once
@@ -39,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from xeloader_spark.operators.dedup import minhash_sigs_rowwise
+from xeloader_spark.operators.minhash import band_keys, row_signatures
 
 K = 12
 BANDS = 4
@@ -98,18 +99,8 @@ def streaming_minhash_neardup(
     """documents stream → per-band candidate near-dup pairs with
     signature-agreement scores ≥ `min_agree`. Append mode: each pair is
     an immutable fact about the micro-batch its new side arrived in."""
-    sigs = minhash_sigs_rowwise(
-        docs, n=n, k=K, text_col=text_col, id_col=id_col
-    ).filter(F.col("h0").isNotNull())
-    banded = sigs
-    for b in range(BANDS):
-        cols = [F.col(f"h{b * ROWS + r}") for r in range(ROWS)]
-        banded = banded.withColumn(f"band{b}", F.md5(F.concat_ws("#", *cols)))
-    stack = ", ".join(f"{b}, band{b}" for b in range(BANDS))
-    long = banded.selectExpr(
-        "id", *[f"h{s}" for s in range(K)],
-        f"stack({BANDS}, {stack}) AS (band_idx, bk)",
-    )
+    sigs = row_signatures(docs, n=n, k=K, text_col=text_col, id_col=id_col)
+    long = band_keys(sigs, BANDS, ROWS, *[f"h{s}" for s in range(K)])
     pairs = long.groupBy("band_idx", "bk").applyInPandasWithState(
         _bucket_stitch,
         outputStructType=PAIR_SCHEMA,

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from xeloader_spark.operators.dedup import TOKEN_SPLIT_RE_SQL
+from xeloader_spark.operators.text import _tok_array, ngram_array_sql
 
 # keep in sync with queries/dedup._SNM_WINDOW/_SNM_KEY_TOKENS — the
 # batch-parity test compares against q_sorted_neighborhood_pairs' shape
@@ -130,15 +130,10 @@ def streaming_snm_neardup(
     (id_a < id_b under the ascending-id arrival contract). Append mode:
     each pair is an immutable fact of the micro-batch its id_b arrived
     in."""
-    toks = f"filter(split({text_col}, '{TOKEN_SPLIT_RE_SQL}'), x -> x != '')"
-    sh = (
-        f"CASE WHEN size(_toks) < {SHINGLE_N} THEN array() "
-        f"ELSE array_distinct(transform(sequence(0, size(_toks) - {SHINGLE_N}), "
-        f"i -> array_join(slice(_toks, i + 1, {SHINGLE_N}), ' '))) END"
-    )
+    sh = f"array_distinct({ngram_array_sql('_toks', SHINGLE_N)})"
     key_sql = f"lower(array_join(slice(_toks, 1, {KEY_TOKENS}), ' '))"
     keyed = docs.select(
-        F.col(id_col).alias("id"), F.expr(toks).alias("_toks")
+        F.col(id_col).alias("id"), F.expr(_tok_array(text_col)).alias("_toks")
     ).select(
         "id", F.expr(key_sql).alias("sk"), F.expr(sh).alias("sh")
     )
