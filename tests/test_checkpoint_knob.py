@@ -1,28 +1,36 @@
-"""Reliable-checkpoint knob for the iterative family (VERDICT r8 #2).
+"""Session truncation policy for the iterative family.
 
-Every iterative operator truncates lineage per round. The default is
-``localCheckpoint(eager=True)`` — executor-memory blocks with NO
-fault tolerance, fine on ``local[*]``. The ``checkpoint_dir`` knob
-switches the same truncation points to reliable ``df.checkpoint()``
-(``plans.truncate.round_truncate``), the production form on a
-1000-executor cluster where executor loss must recompute, not kill the
-job. These tests pin that the two modes are value-identical — the knob
-changes WHERE blocks live, never WHAT is computed.
+Every iterative operator truncates lineage per round through
+``plans.truncate.round_truncate``. Without a SparkContext checkpoint
+directory that is an executor-local checkpoint — executor-memory blocks
+with NO fault tolerance, fine on ``local[*]``. With one
+(``sc.setCheckpointDir``), the same truncation points write reliable
+``df.checkpoint()`` files, the production form on a 1000-executor
+cluster where executor loss must recompute, not kill the job. These
+tests pin that the two modes are value-identical — the session setting
+changes WHERE blocks live, never WHAT is computed — and that the
+setting is what selects the path.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from xeloader_spark.operators.crawl import resolve_redirects
 from xeloader_spark.operators.dedup import connected_components
 from xeloader_spark.operators.graph import (
     harmonic_centrality,
+    hits,
     hyperball_harmonic,
     kcore,
     label_propagation,
     pagerank,
     pagerank_weighted,
 )
+from xeloader_spark.operators.itemsets import frequent_pairs
+from xeloader_spark.operators.text import bpe_train
 from xeloader_spark.plans.truncate import round_truncate
 
 
@@ -40,125 +48,141 @@ def _sorted(df):
     return [tuple(r) for r in df.orderBy(*df.columns).collect()]
 
 
-def test_round_truncate_sets_dir_once(spark, tmp_path):
-    # NOTE the SparkContext checkpoint dir is GLOBAL and first-caller-
-    # wins for the context's lifetime, so this test must not assume it
-    # runs first in the session: it asserts a dir is set after the
-    # call and that later calls with different dirs don't churn it —
-    # order-independent (r9 review). The *_identical tests below
-    # therefore verify VALUE identity under the reliable path, not
-    # that their particular directory was honored.
-    df = spark.range(5)
-    out = round_truncate(df, str(tmp_path / "ck1"))
-    assert _sorted(out) == _sorted(df)
-    got = spark.sparkContext.getCheckpointDir()
-    assert got is not None
-    # a later call with a DIFFERENT dir must not churn the context dir
-    # (Spark appends a UUID subdir per setCheckpointDir call)
-    round_truncate(spark.range(3), str(tmp_path / "ck2"))
-    assert spark.sparkContext.getCheckpointDir() == got
+def _identical(checkpoint_dir, build):
+    """`build()`'s rows without and with a session checkpoint dir."""
+    local = _sorted(build())
+    with checkpoint_dir():
+        reliable = _sorted(build())
+    assert local == reliable and local
+    return local
 
 
-def test_pagerank_identical_under_reliable_checkpoint(spark, tmp_path):
-    e = _edges(spark)
-    local = pagerank(e, iters=3)
-    reliable = pagerank(e, iters=3, checkpoint_dir=str(tmp_path / "pr"))
-    assert _sorted(local) == _sorted(reliable)
+def test_round_truncate_follows_session_dir(spark, session_checkpoint_dir):
+    from xeloader_spark.plans.truncate import _PERSISTED, release_persisted
+
+    release_persisted()
+    with session_checkpoint_dir() as ck:
+        out = round_truncate(spark.range(5))
+        assert _sorted(out) == _sorted(spark.range(5))
+        # reliable: nothing joins the executor-block registry, and the
+        # frame lives in checkpoint files under the session directory
+        assert len(_PERSISTED) == 0
+        ck_path = ck.removeprefix("file:")
+        assert any(files for _, _, files in os.walk(ck_path))
+    # the directory is cleared again: back to the registered local path
+    assert spark.sparkContext.getCheckpointDir() is None
+    assert round_truncate(spark.range(5)).count() == 5
+    assert len(_PERSISTED) == 1
+    release_persisted()
 
 
-def test_pagerank_weighted_identical(spark, tmp_path):
+def test_pagerank_identical_under_reliable_checkpoint(spark, session_checkpoint_dir):
+    _identical(session_checkpoint_dir, lambda: pagerank(_edges(spark), iters=3))
+
+
+def test_pagerank_weighted_identical(spark, session_checkpoint_dir):
     e = _edges(spark).withColumn("weight", (F.col("src") % 3 + 1).cast("long"))
     seeds = spark.createDataFrame([(1,), (10,)], "id long")
-    local = pagerank_weighted(e, iters=3, teleport=seeds)
-    reliable = pagerank_weighted(
-        e, iters=3, teleport=seeds, checkpoint_dir=str(tmp_path / "prw")
+    _identical(
+        session_checkpoint_dir,
+        lambda: pagerank_weighted(e, iters=3, teleport=seeds),
     )
-    assert _sorted(local) == _sorted(reliable)
 
 
-def test_label_propagation_identical(spark, tmp_path):
-    e = _edges(spark)
+def test_hits_identical(spark, session_checkpoint_dir):
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)], "src long, dst long"
+    )
+    _identical(session_checkpoint_dir, lambda: hits(df, iters=3))
+
+
+def test_label_propagation_identical(spark, session_checkpoint_dir):
     seeds = spark.createDataFrame(
         [(1, "a"), (4, "b"), (10, "c")], "id long, label string"
     )
-    local = label_propagation(e, seeds, iters=3)
-    reliable = label_propagation(
-        e, seeds, iters=3, checkpoint_dir=str(tmp_path / "lp")
+    _identical(
+        session_checkpoint_dir,
+        lambda: label_propagation(_edges(spark), seeds, iters=3),
     )
-    assert _sorted(local) == _sorted(reliable)
 
 
-def test_kcore_identical(spark, tmp_path):
+def test_kcore_identical(spark, session_checkpoint_dir):
+    _identical(session_checkpoint_dir, lambda: kcore(_edges(spark), k=2, rounds=3))
+
+
+def test_harmonic_and_hyperball_identical(spark, session_checkpoint_dir):
     e = _edges(spark)
-    local = kcore(e, k=2, rounds=3)
-    reliable = kcore(e, k=2, rounds=3, checkpoint_dir=str(tmp_path / "kc"))
-    assert _sorted(local) == _sorted(reliable)
-
-
-def test_harmonic_and_hyperball_identical(spark, tmp_path):
-    e = _edges(spark)
-    local_h = harmonic_centrality(e, rounds=3)
-    reliable_h = harmonic_centrality(
-        e, rounds=3, checkpoint_dir=str(tmp_path / "hc")
+    _identical(session_checkpoint_dir, lambda: harmonic_centrality(e, rounds=3))
+    _identical(
+        session_checkpoint_dir, lambda: hyperball_harmonic(e, rounds=2, p=4)
     )
-    assert _sorted(local_h) == _sorted(reliable_h)
-    local_b = hyperball_harmonic(e, rounds=2, p=4)
-    reliable_b = hyperball_harmonic(
-        e, rounds=2, p=4, checkpoint_dir=str(tmp_path / "hb")
-    )
-    assert _sorted(local_b) == _sorted(reliable_b)
 
 
-def test_frequent_pairs_identical(spark, tmp_path):
-    # itemsets' shared basket frame goes through the knob too (r10,
-    # VERDICT r9 #5 — the last operator-level truncation not threaded)
-    from xeloader_spark.operators.itemsets import frequent_pairs
-
+def test_frequent_pairs_identical(spark, session_checkpoint_dir):
+    # the shared basket frame goes through round_truncate too
     tx = spark.createDataFrame(
         [(b, i) for b in range(6) for i in range(b % 4 + 2)],
         "basket long, item long",
     )
-    local = frequent_pairs(tx, "basket", "item", 2, 2)
-    reliable = frequent_pairs(
-        tx, "basket", "item", 2, 2, checkpoint_dir=str(tmp_path / "fp")
+    _identical(
+        session_checkpoint_dir,
+        lambda: frequent_pairs(tx, "basket", "item", 2, 2),
     )
-    assert _sorted(local) == _sorted(reliable) and _sorted(local)
 
 
-def test_bpe_train_identical_under_reliable_checkpoint(spark, tmp_path):
+def test_bpe_train_identical_under_reliable_checkpoint(spark, session_checkpoint_dir):
     # the BPE merge loop's per-round truncation (checkpoint_every)
-    from xeloader_spark.operators.text import bpe_train
-
     df = spark.createDataFrame(
         [("low lower lowest newer newest",), ("low newer low widest",)],
         "text string",
     )
-    local = bpe_train(df, iters=4, checkpoint_every=2)
-    reliable = bpe_train(
-        df,
-        iters=4,
-        checkpoint_every=2,
-        checkpoint_dir=str(tmp_path / "bpe"),
+    _identical(
+        session_checkpoint_dir,
+        lambda: bpe_train(df, iters=4, checkpoint_every=2),
     )
-    assert _sorted(local) == _sorted(reliable) and _sorted(local)
 
 
-def test_connected_components_identical(spark, tmp_path):
+def test_resolve_redirects_identical(spark, session_checkpoint_dir):
+    # pointer doubling truncates its state frame every doubling round;
+    # a 5-chain, a 4-cycle and one 1-hop redirect
+    rows = [(f"u{a}", f"u{b}") for a, b in [
+        (1, 0), (2, 1), (3, 2), (4, 3), (5, 4),
+        (10, 11), (11, 12), (12, 13), (13, 10), (20, 21),
+    ]]
+    e = spark.createDataFrame(rows, "src string, dst string")
+    got = _identical(session_checkpoint_dir, lambda: resolve_redirects(e))
+    assert ("u5", "u0", 5, True) in got
+
+
+def test_connected_components_identical(spark, session_checkpoint_dir):
+    # local_threshold=0 takes the distributed star path, the one that
+    # truncates per round
     pairs = _edges(spark).select(
         F.col("src").alias("id_a"), F.col("dst").alias("id_b")
     )
-    for algo in ("star", "label"):
-        local = connected_components(
-            pairs, max_iter=10, local_threshold=0, distributed_algorithm=algo
-        )
-        reliable = connected_components(
-            pairs,
-            max_iter=10,
-            local_threshold=0,
-            distributed_algorithm=algo,
-            checkpoint_dir=str(tmp_path / f"cc_{algo}"),
-        )
-        assert _sorted(local) == _sorted(reliable)
+    got = _identical(
+        session_checkpoint_dir,
+        lambda: connected_components(pairs, max_iter=10, local_threshold=0),
+    )
+    assert {c for _, c in got} == {1, 10}
+
+
+def test_q_label_propagation_identical(spark, sf_dir, session_checkpoint_dir):
+    # a whole query: kNN edges plus the propagation rounds, exceptAll
+    from xeloader_spark.plans.truncate import release_persisted
+    from xeloader_spark.queries import all_queries
+
+    q = all_queries()["q_label_propagation"]
+    try:
+        local = q(spark, sf_dir)
+        with session_checkpoint_dir():
+            reliable = q(spark, sf_dir)
+            assert local.schema == reliable.schema
+            assert local.exceptAll(reliable).isEmpty()
+            assert reliable.exceptAll(local).isEmpty()
+            assert local.count() > 0
+    finally:
+        release_persisted()
 
 
 def test_registered_checkpoints_release_blocks(spark):

@@ -36,8 +36,8 @@ def _edge_df(spark):
     )
 
 
-def _resolve_rows(spark, **kw):
-    out = resolve_redirects(_edge_df(spark), max_hops=8, **kw)
+def _resolve_rows(spark):
+    out = resolve_redirects(_edge_df(spark), max_hops=8)
     return sorted(
         (r.url, r.terminal_url, r.n_hops, r.resolved) for r in out.collect()
     )
@@ -62,11 +62,6 @@ EXPECTED = sorted(
 
 def test_resolve_redirects_chains_and_cycle(spark):
     assert _resolve_rows(spark) == EXPECTED
-
-
-def test_resolve_redirects_reliable_checkpoint_identical(spark, tmp_path):
-    # the checkpoint_dir knob changes fault tolerance, never values
-    assert _resolve_rows(spark, checkpoint_dir=str(tmp_path)) == EXPECTED
 
 
 def test_resolve_redirects_matches_linear_oracle(spark):

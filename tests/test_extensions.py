@@ -199,25 +199,25 @@ class TestClusterResolution:
                 parent[max(ra, rb)] = min(ra, rb)
         return {n: find(n) for n in nodes}
 
-    @pytest.mark.parametrize("algo", ["star", "label"])
-    def test_chain_worst_case_diameter(self, spark, algo):
-        # a path graph 0-1-2-...-9: min label must walk the full diameter.
-        # local_threshold=0 forces the DISTRIBUTED paths (the union-find
-        # parity test below covers the driver-local path).
+    # local_threshold=0 forces the distributed star path (the
+    # union-find parity test below covers the driver-local path)
+    @pytest.mark.parametrize("local_threshold", [0], ids=["star"])
+    def test_chain_worst_case_diameter(self, spark, local_threshold):
+        # a path graph 0-1-2-...-9: the min id must reach the far end
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(9)], "id_a long, id_b long"
         )
         got = {
             (r.node, r.cluster)
             for r in dd.connected_components(
-                pairs, local_threshold=0, distributed_algorithm=algo
+                pairs, local_threshold=local_threshold
             ).collect()
         }
         assert got == {(i, 0) for i in range(10)}
         dd.release_persisted()
 
-    @pytest.mark.parametrize("algo", ["star", "label"])
-    def test_chain_string_ids_distributed(self, spark, algo):
+    @pytest.mark.parametrize("local_threshold", [0], ids=["star"])
+    def test_chain_string_ids_distributed(self, spark, local_threshold):
         # regression: convergence check must be id-type-independent.
         # A SUM-of-labels fixpoint is NULL for string ids every round, so
         # the loop stopped after one propagation and mislabeled any
@@ -229,14 +229,14 @@ class TestClusterResolution:
         got = {
             (r.node, r.cluster)
             for r in dd.connected_components(
-                pairs, local_threshold=0, distributed_algorithm=algo
+                pairs, local_threshold=local_threshold
             ).collect()
         }
         assert got == {(f"doc{i:02d}", "doc00") for i in range(10)}
         dd.release_persisted()
 
-    @pytest.mark.parametrize("algo", ["star", "label"])
-    def test_local_and_distributed_paths_agree(self, spark, algo):
+    @pytest.mark.parametrize("local_threshold", [0], ids=["star"])
+    def test_local_and_distributed_paths_agree(self, spark, local_threshold):
         import random
 
         rng = random.Random(7)
@@ -252,7 +252,7 @@ class TestClusterResolution:
         dist = {
             (r.node, r.cluster)
             for r in dd.connected_components(
-                pairs, local_threshold=0, distributed_algorithm=algo
+                pairs, local_threshold=local_threshold
             ).collect()
         }
         assert local == dist
@@ -271,7 +271,6 @@ class TestClusterResolution:
                 pairs,
                 local_threshold=0,
                 max_iter=8,
-                distributed_algorithm="star",
             ).collect()
         }
         assert got == {(i, 0) for i in range(41)}
@@ -1354,21 +1353,6 @@ class TestHits:
         n2 = plans.count_exchanges(hits(df, iters=2))
         n8 = plans.count_exchanges(hits(df, iters=8))
         assert n2 == n8
-
-    def test_checkpoint_knob_value_identity(self, spark, tmp_path):
-        from xeloader_spark.operators.graph import hits
-
-        df = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)], "src long, dst long"
-        )
-        local = sorted(tuple(r) for r in hits(df, iters=3).collect())
-        reliable = sorted(
-            tuple(r)
-            for r in hits(
-                df, iters=3, checkpoint_dir=str(tmp_path / "hits_ck")
-            ).collect()
-        )
-        assert local == reliable
 
 
 def test_plane_sign_literal_matches_md5_case(spark):

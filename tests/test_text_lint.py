@@ -9,7 +9,10 @@ home, and a pasted copy fails here until it is routed through it.
   bit slices, not on this digest, and are not matched.
 
 The DuckDB oracle texts spell their tokenizer `list_filter(
-regexp_split_to_array(…))` and are not matched either.
+regexp_split_to_array(…))` and are not matched either. `tools/` is
+scanned too; the inline tokenizers in `tests/` (`test_streaming.py`,
+`test_extensions.py`) stay on purpose, as references independent of
+the engine's copy.
 """
 
 from __future__ import annotations
@@ -17,7 +20,8 @@ from __future__ import annotations
 import pathlib
 import re
 
-ROOT = pathlib.Path(__file__).resolve().parent.parent / "xeloader_spark"
+REPO = pathlib.Path(__file__).resolve().parent.parent
+ROOT = REPO / "xeloader_spark"
 
 # the Spark literal (four source backslashes), or any `filter(split(`
 # whose pattern is interpolated or a whitespace class
@@ -28,12 +32,12 @@ NGRAM = re.compile(r"array_join\(slice\([^,()]+, i \+ 1")
 BAND_MELT = re.compile(r"""concat_ws\(["']#["']""")
 
 
-def _lines(rx: re.Pattern) -> dict[str, list[str]]:
+def _lines(rx: re.Pattern, root: pathlib.Path = ROOT) -> dict[str, list[str]]:
     found: dict[str, list[str]] = {}
-    for p in sorted(ROOT.rglob("*.py")):
+    for p in sorted(root.rglob("*.py")):
         lines = [ln.strip() for ln in p.read_text().splitlines() if rx.search(ln)]
         if lines:
-            found[str(p.relative_to(ROOT))] = lines
+            found[str(p.relative_to(root))] = lines
     return found
 
 
@@ -43,6 +47,9 @@ def test_tokenizer_only_in_tok_array():
             "return f\"filter(split({text_col}, '\\\\\\\\s+'), x -> x != '')\""
         ]
     }, "whitespace tokenizer outside text._tok_array — call it instead"
+    assert _lines(TOKENIZER, REPO / "tools") == {}, (
+        "whitespace tokenizer in tools/ — call text._tok_array"
+    )
 
 
 def test_ngram_array_only_in_ngram_array_sql():

@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from xeloader_spark.catalog import load_table
+from xeloader_spark.operators.text import _tok_array
 from xeloader_spark.session import get_spark
 
 KS = [1, 4, 16]
@@ -314,8 +315,7 @@ def replicate_docs(docs, k: int):
         .select(
             (F.col("doc_id") * k + F.col("_rep")).alias("doc_id"),
             F.expr(
-                "array_join(transform("
-                "filter(split(text, '\\\\s+'), x -> x != ''), "
+                f"array_join(transform({_tok_array('text')}, "
                 "t -> concat(t, '_r', CAST(_rep AS STRING))), ' ')"
             ).alias("text"),
             "lang",
@@ -388,7 +388,7 @@ def lengthen_docs(docs, n_docs: int, base_repeats: int, k: int):
         "doc_id",
         F.expr(
             f"array_join(flatten(transform(sequence(0, {base_repeats} * {k} - 1), "
-            "r -> transform(filter(split(text, '\\\\s+'), x -> x != ''), "
+            f"r -> transform({_tok_array('text')}, "
             "t -> concat(t, '_', CAST(r AS STRING))))), ' ')"
         ).alias("text"),
         "lang",
@@ -479,7 +479,7 @@ def main() -> None:
     # size the doc-length base so K=16 reaches ≥50k tokens per doc
     avg_tokens = (
         docs0.limit(DOCLEN_ROWS)
-        .agg(F.avg(F.expr("size(filter(split(text, '\\\\s+'), x -> x != ''))")))
+        .agg(F.avg(F.expr(f"size({_tok_array('text')})")))
         .first()[0]
     )
     doclen_base = max(1, int(math.ceil(50_000 / (16 * float(avg_tokens)))))

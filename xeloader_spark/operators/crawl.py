@@ -44,7 +44,6 @@ def resolve_redirects(
     max_hops: int = 8,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Resolve every source URL in a redirect map to its terminal URL.
 
@@ -68,8 +67,7 @@ def resolve_redirects(
     1→2→…→max_hops, which is why max_hops must be a power of two: the
     linear oracle counts the same walk one edge at a time and lands on
     the identical n_hops). Per-round lineage truncation goes through
-    `round_truncate` (`checkpoint_dir` switches executor-local
-    blocks to reliable checkpoints at cluster scale)."""
+    `round_truncate`."""
     rounds = max_hops.bit_length() - 1
     if max_hops < 2 or 2**rounds != max_hops:
         raise ValueError(f"max_hops must be a power of two >= 2: {max_hops}")
@@ -81,7 +79,7 @@ def resolve_redirects(
         F.lit(1).cast("long").alias("steps"),
         F.col("_s").isNull().alias("done"),
     )
-    state = round_truncate(state, checkpoint_dir)
+    state = round_truncate(state)
     for _ in range(rounds):
         nxt = state.select(
             F.col("url").alias("_u2"),
@@ -104,7 +102,7 @@ def resolve_redirects(
             .otherwise(F.col("_d2"))
             .alias("done"),
         )
-        state = round_truncate(state, checkpoint_dir)
+        state = round_truncate(state)
     return state.select(
         "url",
         F.when(F.col("done"), F.col("cur")).alias("terminal_url"),

@@ -27,8 +27,6 @@ text) add a document-frequency cap (`max_df`) to drop degenerate buckets.
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -675,11 +673,7 @@ def bloom_decontaminate(
 
 
 # ------------------------------------------------ cluster resolution
-def _cc_star(
-    pairs_uv: DataFrame,
-    max_iter: int,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def _cc_star(pairs_uv: DataFrame, max_iter: int) -> DataFrame:
     """Alternating large-star/small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC 2014 — public
     algorithm): each round hooks every node's larger neighbors onto its
@@ -695,18 +689,12 @@ def _cc_star(
     so convergence is id-type-independent (strings and longs behave
     identically). Returns (node, cluster) for every node that appears in
     an edge.
-
-    `checkpoint_dir` switches the per-round lineage truncation from
-    executor-local `localCheckpoint` (fast, NOT fault-tolerant) to
-    reliable `df.checkpoint()` into that directory — the production
-    form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir)
     E = (
         pairs_uv.filter(F.col("u") != F.col("v"))
         .distinct()
-        .transform(ck)
+        .transform(round_truncate)
     )
     for _ in range(max_iter):
         und = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -732,7 +720,7 @@ def _cc_star(
             .filter(F.col("u") != F.col("v"))
             .union(mins2.select("u", F.col("m").alias("v")))
             .distinct()
-            .transform(ck)
+            .transform(round_truncate)
         )
         stable = new_e.count() == E.count() and new_e.exceptAll(E).isEmpty()
         E = new_e
@@ -752,8 +740,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 50,
     local_threshold: int = 500_000,
-    distributed_algorithm: str = "star",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over an undirected pair list → (node, cluster)
     where cluster = MIN node id in the component. This is the step that
@@ -772,30 +758,16 @@ def connected_components(
     collected `Row` objects cost ~100s of bytes each in Python heap, so
     500k keeps the collect well under ~0.5 GB even for wide string ids —
     safe on a busy shared production driver, not just a quiet sandbox
-    (a 4M-edge collect measured multi-GB). Past the threshold,
-    `distributed_algorithm` picks the loop:
-
-    - "star" (default): large-star/small-star contraction (`_cc_star`) —
-      O(log n) rounds on any topology, the 100 TB-safe choice.
-    - "label": min-label propagation — each round every node takes the
-      min of its own and its neighbors' labels; fixpoint when no label
-      changed (counted on the frame itself, so the check is
-      id-type-independent). Rounds needed = graph DIAMETER, fine for the
-      shallow star-ish clusters near-dup graphs usually form, kept as
-      the simpler-to-audit fallback.
-
-    All three paths are equivalence-tested against each other. Labels /
-    edge frames are `localCheckpoint`ed per round to truncate lineage.
-
-    `checkpoint_dir` switches the per-round lineage truncation from
-    executor-local `localCheckpoint` (fast, NOT fault-tolerant) to
-    reliable `df.checkpoint()` into that directory — the production
-    form at cluster scale (`plans.truncate.round_truncate`).
+    (a 4M-edge collect measured multi-GB). Past the threshold the
+    large-star/small-star contraction (`_cc_star`) runs: O(log n) rounds
+    on any topology, the 100 TB-safe choice, its edge frame truncated
+    per round by `round_truncate`. Union-find is the reference the star
+    path is equivalence-tested against.
     """
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir)
-    # The union reads `pairs` twice; persisting it first keeps the
-    # (possibly expensive) upstream pair pipeline to a single execution.
+    # The gate's collect and the star path both read `pairs`; persisting
+    # it first keeps the (possibly expensive) upstream pair pipeline to a
+    # single execution.
     pairs = registered_persist(pairs.select(id_a, id_b))
     rows = pairs.limit(local_threshold + 1).collect()
     if len(rows) <= local_threshold:
@@ -821,50 +793,9 @@ def connected_components(
             sorted((n, find(n)) for n in nodes),
             f"node {id_type}, cluster {id_type}",
         )
-    if distributed_algorithm == "star":
-        return _cc_star(
-            pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")),
-            max_iter,
-            checkpoint_dir=checkpoint_dir,
-        )
-    edges = registered_persist(
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .union(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
-        .distinct()
+    return _cc_star(
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")), max_iter
     )
-    labels = (
-        edges.select("a")
-        .distinct()
-        .select(F.col("a").alias("node"), F.col("a").alias("cluster"))
-        .transform(ck)
-    )
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("cluster").alias("neigh_min"))
-        )
-        # Carry the previous label alongside the new one so convergence is
-        # a count on this same frame — works for any id type (a SUM-based
-        # check returns NULL for string ids and stops after one round).
-        updated = (
-            labels.join(neigh, labels["node"] == neigh["a"], "left")
-            .select(
-                "node",
-                F.col("cluster").alias("prev_cluster"),
-                F.least(
-                    F.col("cluster"), F.coalesce("neigh_min", "cluster")
-                ).alias("cluster"),
-            )
-            .transform(ck)
-        )
-        changed = updated.filter(
-            F.col("cluster") != F.col("prev_cluster")
-        ).count()
-        labels = updated.select("node", "cluster")
-        if changed == 0:
-            break
-    return labels
 
 
 def resolve_duplicates(

@@ -38,7 +38,6 @@ def pagerank(
     scale: int = 10**12,
     damp_num: int = 85,
     damp_den: int = 100,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Quantized-integer PageRank over a directed edge list.
 
@@ -58,14 +57,9 @@ def pagerank(
     plan stays O(1) per round instead of O(iters) (same discipline as
     `bpe_train`'s checkpoint cadence). The driver holds only n (one
     count scalar), never rows.
-
-    `checkpoint_dir` switches the per-round lineage truncation from
-    executor-local `localCheckpoint` (fast, NOT fault-tolerant) to
-    reliable `df.checkpoint()` into that directory — the production
-    form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
+    ck = partial(round_truncate, eager=False)
     # materialize the edge list ONCE — nodes, outdegrees, and every
     # iteration all derive from this checkpoint, so an expensive edge
     # producer (e.g. the banded-LSH k-NN self-join) runs a single time
@@ -122,7 +116,6 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     scale: int = 10**9,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999, public) over a directed
     edge list — the OTHER classic web-centrality rank beside PageRank:
@@ -149,14 +142,12 @@ def hits(
     Scale shape: edges shuffle once up front (distinct), then each
     round is two edge-sized joins + two node-sized aggregates + two
     1-row totals broadcast back — the node frames truncate per round
-    through `round_truncate` (`checkpoint_dir` switches executor-local
-    localCheckpoint to reliable `df.checkpoint()`, the production
-    fault-tolerance form)."""
+    through `round_truncate`."""
 
     if iters < 1:
         raise ValueError("hits: iters must be >= 1")
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
+    ck = partial(round_truncate, eager=False)
 
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -338,7 +329,6 @@ def label_propagation(
     edges: DataFrame,
     seeds: DataFrame,
     iters: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Semi-supervised label propagation over a directed neighbor graph
     (k-NN edges): seed nodes carry known labels; each round, every
@@ -356,14 +346,9 @@ def label_propagation(
     anti-join to restrict to the frontier — all edge-/node-keyed
     shuffles, the vector payloads never move; the label frame is
     localCheckpoint-ed per round so plans stay O(1) in iters.
-
-    `checkpoint_dir` switches the per-round lineage truncation from
-    executor-local `localCheckpoint` (fast, NOT fault-tolerant) to
-    reliable `df.checkpoint()` into that directory — the production
-    form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
+    ck = partial(round_truncate, eager=False)
     labels = seeds.select(
         "id", "label", F.lit(0).cast("long").alias("round_assigned")
     ).transform(ck)
@@ -404,7 +389,6 @@ def pagerank_weighted(
     wscale: int = 10**6,
     damp_num: int = 85,
     damp_den: int = 100,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Weighted, optionally PERSONALIZED PageRank — the two standard
     generalizations of `pagerank` in one operator, still bit-exact
@@ -426,14 +410,9 @@ def pagerank_weighted(
     aggregate, ranks checkpoint per round so plans stay O(1) in iters.
     Floor divisions leak O(outdeg) micro-units per node per round —
     quantization noise, never sign-relevant.
-
-    `checkpoint_dir` switches the per-round lineage truncation from
-    executor-local `localCheckpoint` (fast, NOT fault-tolerant) to
-    reliable `df.checkpoint()` into that directory — the production
-    form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
+    ck = partial(round_truncate, eager=False)
     # materialize the edge list ONCE (same discipline as `pagerank` and
     # `hits`; r13): without this checkpoint the node-set action and the
     # weight-normalization action each re-derived the edge PRODUCER —
@@ -521,7 +500,6 @@ def kcore(
     edges: DataFrame,
     k: int,
     rounds: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Bounded k-core peeling over an UNDIRECTED graph: `rounds`
     iterations of "drop every node whose surviving degree < k", the
@@ -540,14 +518,9 @@ def kcore(
     edge-sized shuffles; the node frame is localCheckpoint-ed per round
     so plans stay O(1) in rounds. The vector/doc payloads behind the
     node ids never enter the loop.
-
-    `checkpoint_dir` switches the per-round lineage truncation from
-    executor-local `localCheckpoint` (fast, NOT fault-tolerant) to
-    reliable `df.checkpoint()` into that directory — the production
-    form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
+    ck = partial(round_truncate, eager=False)
     # symmetrize in ONE pass over `edges` (explode both orientations per
     # row) instead of union(edges, reverse(edges)) — the union form
     # consumed the edge producer twice, re-running an expensive upstream
@@ -688,7 +661,6 @@ def harmonic_centrality(
     src_col: str = "src",
     dst_col: str = "dst",
     scale: int = 1_200_000_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact bounded-hop harmonic centrality over a directed edge list:
     H(v) = Σ_{w reaches v within `rounds` hops} 1/d(w, v) — the
@@ -711,14 +683,9 @@ def harmonic_centrality(
     form is the validation/bounded-host-set path; the 100 TB path is
     `hyperball_harmonic` below (register-table rounds, O(nodes · 2^p)
     state), parity-bounded against this operator in pytest.
-
-    `checkpoint_dir` switches the per-round lineage truncation from
-    executor-local `localCheckpoint` (fast, NOT fault-tolerant) to
-    reliable `df.checkpoint()` into that directory — the production
-    form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
+    ck = partial(round_truncate, eager=False)
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
@@ -765,7 +732,6 @@ def hyperball_harmonic(
     src_col: str = "src",
     dst_col: str = "dst",
     salt: str = "hb",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """HyperBall (Boldi & Vigna 2013, public): approximate harmonic
     centrality at web scale. Each node carries an HLL counter of the
@@ -784,14 +750,9 @@ def hyperball_harmonic(
     estimate error vs exact is the standard ~1.04/√2^p HLL envelope.
 
     Returns (id, harmonic_est double, ball_final double).
-
-    `checkpoint_dir` switches the per-round lineage truncation from
-    executor-local `localCheckpoint` (fast, NOT fault-tolerant) to
-    reliable `df.checkpoint()` into that directory — the production
-    form at cluster scale (`plans.truncate.round_truncate`).
     """
 
-    ck = partial(round_truncate, checkpoint_dir=checkpoint_dir, eager=False)
+    ck = partial(round_truncate, eager=False)
     from .sketch import _hll_reg_cols, hll_estimate
 
     e = (

@@ -20,7 +20,6 @@ def frequent_pairs(
     min_item_support: int = 3,
     min_pair_support: int = 2,
     max_basket_items: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """A-priori frequent-pair mining: unordered item pairs co-occurring in
     at least `min_pair_support` baskets, with supports and lift.
@@ -59,9 +58,8 @@ def frequent_pairs(
     # aggregate), then eagerly checkpoint so the three consumers below
     # (basket total, item supports, pair carve) share the materialized
     # basket frame instead of re-scanning the transaction table —
-    # through `round_truncate` so production runs can make the shared
-    # basket frame fault-tolerant with the same knob the fixed-point
-    # operators take (r10, VERDICT r9 #5).
+    # through `round_truncate`, so the shared basket frame follows the
+    # session's truncation policy like the fixed-point operators.
     from ..plans.truncate import round_truncate
 
     baskets0 = round_truncate(
@@ -69,8 +67,7 @@ def frequent_pairs(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
         )
         .groupBy("basket")
-        .agg(F.array_sort(F.collect_set("item")).alias("all_items")),
-        checkpoint_dir,
+        .agg(F.array_sort(F.collect_set("item")).alias("all_items"))
     )
     item_sup = (
         baskets0.select(F.explode("all_items").alias("item"))

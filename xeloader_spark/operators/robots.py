@@ -298,6 +298,20 @@ def _match_py(path: str, pattern: str) -> bool:
     return sn == "" or path.find(sn, pos) >= 0
 
 
+def _first_match(path, rules) -> tuple[int, bool]:
+    """(matched_len, allowed) of the first rule in `rules` — (len,
+    allow, prefix) triples pre-sorted by (len, allow) DESC, so the
+    first match is the RFC longest-match winner (Allow wins length
+    ties) — that matches `path`. A NULL path matches nothing; no match
+    keeps the RFC allowed default; a NULL allow that wins allows (the
+    SQL form's coalesce)."""
+    if path is not None:
+        for ln, allow, prefix in rules:
+            if _match_py(path, prefix):
+                return ln, allow is None or bool(allow)
+    return -1, True
+
+
 def robots_filter(
     df: DataFrame,
     rules: list[Rule],
@@ -345,20 +359,11 @@ def robots_filter(
 
     @F.pandas_udf("matched_len long, allowed boolean")
     def _verdict(host: pd.Series, path: pd.Series) -> pd.DataFrame:
-        lens, allows = [], []
-        for h, p in zip(host.values, path.values):
-            # NULL path/host ≡ the SQL form: a NULL never matches a
-            # rule, so the row keeps the RFC allowed default
-            rules_h = by_host.get(h, ()) if p is not None else ()
-            for ln, allow, pref in rules_h:
-                if _match_py(p, pref):
-                    lens.append(ln)
-                    allows.append(allow)
-                    break
-            else:
-                lens.append(-1)
-                allows.append(True)
-        return pd.DataFrame({"matched_len": lens, "allowed": allows})
+        got = [
+            _first_match(p, by_host.get(h, ()))
+            for h, p in zip(host.values, path.values)
+        ]
+        return pd.DataFrame(got, columns=["matched_len", "allowed"])
 
     v = _verdict.asNondeterministic()
     return (
@@ -367,11 +372,6 @@ def robots_filter(
         .withColumn("allowed", F.col("_rep_v.allowed"))
         .drop("_rep_v")
     )
-
-
-# SQL struct order of a rule's `allow` (NULL < false < true), the
-# tie-break of the longest-match pick
-_ALLOW_RANK = {None: 0, False: 1, True: 2}
 
 
 def robots_filter_table(
@@ -397,11 +397,17 @@ def robots_filter_table(
     (-1 = no rule), allowed (no rules for host → allowed: filter/sort
     over the NULL rule array is NULL, coalesced to the RFC default)."""
     host_sql, path_sql = _url_exprs(url_col)
+    # each host's rules sorted once, in the aggregate: NULL prefixes
+    # dropped (collect_list skips the NULL struct), then (len, allow)
+    # DESC — struct order puts a NULL allow below false and true, as the
+    # SQL form's max-struct pick does
     host_rules = rules_df.groupBy(
         F.lower(F.col("host")).alias("_rhost")
     ).agg(
         F.expr(
-            "collect_list(named_struct('prefix', prefix, 'allow', allow))"
+            "sort_array(collect_list(CASE WHEN prefix IS NOT NULL THEN"
+            " named_struct('len', length(prefix), 'allow', allow,"
+            " 'prefix', prefix) END), false)"
         ).alias("_rules")
     )
     annotated = df.withColumn("host", F.expr(host_sql)).withColumn(
@@ -417,32 +423,22 @@ def robots_filter_table(
     # pushdown into every consumer of the verdict columns (the
     # robots_filter pathology: one interpreted filter+sort pipeline per
     # mention). Here the rules arrive as DATA (array<struct> per host),
-    # so the per-row match sorts the host's few rules by (len, allow)
-    # DESC and takes the first match — identical to the max-struct
-    # pick, with the same no-rules → allowed default. NULL rule fields
-    # follow the SQL form too: a NULL prefix never matches (the match
-    # predicate is NULL), a NULL allow sorts below false and true (struct
-    # ordering puts NULL first) and allows when it wins (coalesce).
+    # already sorted by the aggregate, so the per-row match is the same
+    # first-match walk as the literal variant (no rules → allowed).
     # Non-deterministic mark stops optimizer duplication (§4.4). Values
     # pinned by the literal-vs-table parity test and the oracle replays.
     @F.pandas_udf("matched_len long, allowed boolean")
     def _verdict(path: pd.Series, rules: pd.Series) -> pd.DataFrame:
-        lens, allows = [], []
-        for p, rl in zip(path.values, rules.values):
-            best = (-1, True)
-            if p is not None and rl is not None:
-                for r in sorted(
-                    (r for r in rl if r["prefix"] is not None),
-                    key=lambda r: (len(r["prefix"]), _ALLOW_RANK[r["allow"]]),
-                    reverse=True,
-                ):
-                    if _match_py(p, r["prefix"]):
-                        allow = r["allow"] is None or bool(r["allow"])
-                        best = (len(r["prefix"]), allow)
-                        break
-            lens.append(best[0])
-            allows.append(best[1])
-        return pd.DataFrame({"matched_len": lens, "allowed": allows})
+        got = [
+            _first_match(
+                p,
+                ()
+                if rl is None
+                else ((r["len"], r["allow"], r["prefix"]) for r in rl),
+            )
+            for p, rl in zip(path.values, rules.values)
+        ]
+        return pd.DataFrame(got, columns=["matched_len", "allowed"])
 
     v = _verdict.asNondeterministic()
     return (

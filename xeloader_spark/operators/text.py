@@ -1294,7 +1294,6 @@ def bpe_train(
     iters: int = 5,
     text_col: str = "text",
     checkpoint_every: int = 16,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Iterative BPE merge training (Sennrich et al. 2016, the public
     algorithm): `iters` rounds of count-adjacent-pairs → merge the most
@@ -1314,11 +1313,10 @@ def bpe_train(
 
     Plan growth is bounded: each merge appends one replace projection to
     `segs`, so every `checkpoint_every` rounds the frame is truncated
-    via ``plans.truncate.round_truncate`` (executor-local by default;
-    pass `checkpoint_dir` for the fault-tolerant reliable path,
-    materializing the vocab-sized working set either way). A realistic tokenizer train (10³–10⁴ merges)
-    therefore keeps both the logical plan and the driver round-trip O(k)
-    per action instead of O(total merges).
+    via ``plans.truncate.round_truncate``, materializing the vocab-sized
+    working set. A realistic tokenizer train (10³–10⁴ merges) therefore
+    keeps both the logical plan and the driver round-trip O(k) per
+    action instead of O(total merges).
     """
     spark = df.sparkSession
     toks = df.select(F.explode(F.expr(_tok_array(text_col))).alias("tok"))
@@ -1375,10 +1373,9 @@ def bpe_train(
             ),
         )
         if checkpoint_every and rnd % checkpoint_every == 0:
-            # per-round loop truncation — goes through the knob so
-            # production trains can use reliable checkpoints (r10); the
-            # registry frees the local blocks at release_persisted()
-            segs = round_truncate(segs, checkpoint_dir)
+            # per-round loop truncation; the registry frees the local
+            # blocks at release_persisted()
+            segs = round_truncate(segs)
     seg0.unpersist()
     return local_frame(
         spark, merges, "merge_round int, left_sym string, right_sym string, n long"
