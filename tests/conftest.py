@@ -32,6 +32,23 @@ def sf_oracle_dir():
     return SF_ORACLE
 
 
+@pytest.fixture
+def bpe_lcg_docs(spark):
+    """One document of 80 distinct pseudo-random 12-char words from a
+    fixed LCG: ~880 collapsible pairs, far more merges than any BPE test
+    asks for."""
+    alpha = "abcdefghijklmnop"
+    state, words = 12345, []
+    for _ in range(80):
+        chars = []
+        for _ in range(12):
+            state = (state * 1103515245 + 12345) % (2**31)
+            # high bits: LCG low bits cycle with a tiny period
+            chars.append(alpha[(state >> 16) % len(alpha)])
+        words.append("".join(chars))
+    return spark.createDataFrame([(0, " ".join(words))], ["doc_id", "text"])
+
+
 def _clear_checkpoint_dir(sc) -> None:
     # PySpark has no unset; the JVM field setter returns
     # getCheckpointDir() to None

@@ -62,8 +62,7 @@ WHITELIST: dict[str, list[str]] = {
     # 1-row edge total; HITS per-round 1-row normalization totals
     "operators/graph.py": [
         ".crossJoin(F.broadcast(tot))",
-        ".crossJoin(F.broadcast(ta))",
-        ".crossJoin(F.broadcast(th))",
+        ".crossJoin(F.broadcast(total))",
     ],
     # file-catalog-sized lineage
     "operators/ingest.py": [

@@ -1,7 +1,8 @@
 """Session truncation policy for the iterative family.
 
 Every iterative operator truncates lineage per round through
-``plans.truncate.round_truncate``. Without a SparkContext checkpoint
+``plans.truncate.round_truncate`` (most of them by running their rounds
+through ``plans.truncate.iterate``). Without a SparkContext checkpoint
 directory that is an executor-local checkpoint — executor-memory blocks
 with NO fault tolerance, fine on ``local[*]``. With one
 (``sc.setCheckpointDir``), the same truncation points write reliable
@@ -31,7 +32,7 @@ from xeloader_spark.operators.graph import (
 )
 from xeloader_spark.operators.itemsets import frequent_pairs
 from xeloader_spark.operators.text import bpe_train
-from xeloader_spark.plans.truncate import round_truncate
+from xeloader_spark.plans.truncate import iterate, round_truncate
 
 
 def _edges(spark):
@@ -130,16 +131,12 @@ def test_frequent_pairs_identical(spark, session_checkpoint_dir):
     )
 
 
-def test_bpe_train_identical_under_reliable_checkpoint(spark, session_checkpoint_dir):
-    # the BPE merge loop's per-round truncation (checkpoint_every)
-    df = spark.createDataFrame(
-        [("low lower lowest newer newest",), ("low newer low widest",)],
-        "text string",
-    )
-    _identical(
-        session_checkpoint_dir,
-        lambda: bpe_train(df, iters=4, checkpoint_every=2),
-    )
+def test_bpe_train_identical_under_reliable_checkpoint(
+    spark, bpe_lcg_docs, session_checkpoint_dir
+):
+    # 17 merges: both modes cross the truncation after merge 16
+    got = _identical(session_checkpoint_dir, lambda: bpe_train(bpe_lcg_docs, iters=17))
+    assert [r[0] for r in got] == list(range(1, 18))
 
 
 def test_resolve_redirects_identical(spark, session_checkpoint_dir):
@@ -245,3 +242,68 @@ def test_query_build_keeps_registered_frames(spark, sf_dir):
         assert held.count() == 100
     finally:
         release_persisted()
+
+
+def _value(df):
+    return df.first()[0]
+
+
+def test_iterate_until_stops_after_first_hold(spark):
+    seen = []
+
+    def step(df, r):
+        seen.append(r)
+        return spark.range(r, r + 1)
+
+    out = iterate(
+        spark.range(0, 1), step, 10, until=lambda prev, new: _value(new) == 3
+    )
+    assert seen == [1, 2, 3]
+    assert _value(out) == 3
+    # without `until` every round runs
+    seen.clear()
+    assert _value(iterate(spark.range(0, 1), step, 4)) == 4
+    assert seen == [1, 2, 3, 4]
+
+
+def test_iterate_truncates_each_new_frame_once(spark):
+    """A two-phase round adds one registry entry per frame a phase
+    returns anew; a member passed through is the earlier phase's
+    truncated frame and is not truncated again."""
+    from xeloader_spark.plans.truncate import _PERSISTED, release_persisted
+
+    release_persisted()
+    passed = []
+
+    def grow_a(ab, r):
+        return ab[0].selectExpr(f"id + {r} AS id"), ab[1]
+
+    def grow_b(ab, r):
+        # the `a` this phase reads is the frame grow_a's output became
+        passed.append(ab[0] is _PERSISTED[-1][0])
+        return ab[0], ab[1].selectExpr(f"id * {r} AS id")
+
+    try:
+        a, b = iterate(
+            (spark.range(1, 2), spark.range(1, 2)), (grow_a, grow_b), 3
+        )
+        assert len(_PERSISTED) == 6
+        assert passed == [True, True, True]
+        assert a is _PERSISTED[-2][0] and b is _PERSISTED[-1][0]
+        assert (_value(a), _value(b)) == (1 + 1 + 2 + 3, 1 * 1 * 2 * 3)
+        # a phase that passes the whole state through truncates nothing
+        iterate((a, b), lambda ab, r: ab, 2)
+        assert len(_PERSISTED) == 6
+    finally:
+        release_persisted()
+
+
+def test_iterate_zero_rounds_returns_input(spark):
+    from xeloader_spark.plans.truncate import _PERSISTED, release_persisted
+
+    release_persisted()
+    df = spark.range(3)
+    state = (df, spark.range(2))
+    assert iterate(df, lambda d, r: d.limit(1), 0) is df
+    assert iterate(state, (lambda s, r: s,), 0) is state
+    assert len(_PERSISTED) == 0

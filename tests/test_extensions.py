@@ -1223,31 +1223,17 @@ class TestBpeTrain:
         # word collapse it to one token
         assert (row.n_base_symbols, row.n_bpe_tokens) == (12, 3)
 
-    def test_train_256_merges_plan_bounded(self, spark):
+    def test_train_256_merges_plan_bounded(self, spark, bpe_lcg_docs):
         # VERDICT r2: each merge appends a replace projection, so without
         # checkpointing a realistic merge count blows up plan compilation.
         # 256 rounds over a 300-char vocabulary must stay wall-clock
-        # linear (checkpoint every 16 truncates lineage to <=16 replaces).
+        # linear (a truncation every 16 merges keeps <=16 replaces).
         import time
 
         from xeloader_spark.operators.text import bpe_train
 
-        # deterministic pseudo-random vocabulary: 80 distinct 12-char
-        # words -> ~880 collapsible pairs, far more than 256 merges
-        alpha = "abcdefghijklmnop"
-        state, words = 12345, []
-        for _ in range(80):
-            chars = []
-            for _ in range(12):
-                state = (state * 1103515245 + 12345) % (2**31)
-                # high bits: LCG low bits cycle with a tiny period
-                chars.append(alpha[(state >> 16) % len(alpha)])
-            words.append("".join(chars))
-        docs = spark.createDataFrame(
-            [(0, " ".join(words))], ["doc_id", "text"]
-        )
         t0 = time.monotonic()
-        rules = bpe_train(docs, iters=256, checkpoint_every=16).collect()
+        rules = bpe_train(bpe_lcg_docs, iters=256).collect()
         elapsed = time.monotonic() - t0
         assert len(rules) == 256
         assert [r.merge_round for r in rules] == list(range(1, 257))

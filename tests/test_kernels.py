@@ -144,6 +144,55 @@ def test_encode_codes_keeps_invalid_rows_with_null_codes(corpora):
     } == out["clean"]
 
 
+def _kmeans(df, k):
+    return {
+        r.vec_id: (r.cluster, r.dist)
+        for r in cls.kmeans_exact(df, k=k, iters=2).collect()
+    }
+
+
+def _split(out):
+    return {i: v for i, v in out.items() if i in BAD}, {
+        i: v for i, v in out.items() if i not in BAD
+    }
+
+
+def test_kmeans_and_pq_seed_only_valid_vectors(corpora):
+    # 12 seeds by (md5(id), id) reach the 2-wide row: it must not seed
+    hostile, clean = corpora
+    bad, good = _split(_kmeans(hostile, 12))
+    assert bad == dict.fromkeys(BAD, (None, None))
+    assert good == _kmeans(clean, 12)
+    fit = [cls.pq_fit(df, m=2, sub_k=12, iters=2).codebooks for df in corpora]
+    assert fit[0] == fit[1]
+
+
+def test_lloyd_updates_skip_null_cluster_rows(spark):
+    # the NULL-component row is the only one without a cluster or codes,
+    # so its NULL component would be the whole NULL group's sum
+    clean = _clean_rows()
+    hostile = _frame(spark, clean[:5] + [(HOLE_ID, _HOSTILE[HOLE_ID])] + clean[5:])
+    clean = _frame(spark, clean)
+    got = _kmeans(hostile, 4)
+    assert got.pop(HOLE_ID) == (None, None)
+    assert got == _kmeans(clean, 4)
+    fit = [cls.pq_fit(df, m=2, sub_k=4, iters=2).codebooks for df in (hostile, clean)]
+    assert fit[0] == fit[1]
+
+
+@pytest.mark.parametrize("bad_id", sorted(BAD))
+def test_kcenter_seeds_from_a_valid_vector(corpora, bad_id):
+    # the invalid row `bad_id` takes the smallest id, so it sorts first
+    hostile, clean = corpora
+    first = hostile.withColumn(
+        "vec_id",
+        F.when(F.col("vec_id") == bad_id, F.lit(-1)).otherwise(F.col("vec_id")),
+    )
+    got = _rows(cls.kcenter_select(first, k=5))
+    assert got == _rows(cls.kcenter_select(clean, k=5))
+    assert got[0][:2] == (0, 0)
+
+
 def test_lsh_banded_skips_invalid_queries_and_candidates(corpora):
     hostile, clean = corpora
     got = _rows(sim.lsh_ann_topk_banded(hostile, QUERIES, k=5))

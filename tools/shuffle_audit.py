@@ -293,6 +293,14 @@ CHECKPOINT_TRUNCATED_TABLES: dict[str, set[str]] = {
     "q_host_harmonic": {"documents"},
     # domain prior consumes the checkpointed pagerank ranks (r8)
     "q_domain_prior": {"documents"},
+    # crawl builders that checkpoint a fixture or schedule frame; each
+    # reads only `documents` before its checkpoint
+    "q_sitemap_index": {"documents"},
+    "q_discovery_pipeline": {"documents"},
+    "q_crawl_cycle": {"documents"},
+    "q_adaptive_schedule": {"documents"},
+    "q_adaptive_cycle": {"documents"},
+    "q_trap_frontier": {"documents"},
 }
 
 

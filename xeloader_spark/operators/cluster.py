@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from ..plans.truncate import release_persisted  # noqa: F401  (re-export)
 from .kernels import int_matrix, local_frame, quantize_sql
 from .similarity import _dot_sql as _sim_dot_sql
+from .similarity import _vec_dim
 from .similarity import _sq_dist_sql as _sim_sq_dist_sql
 
 K = 8
@@ -76,6 +77,19 @@ def _quantized(
             f"ELSE CAST(round(CAST(v AS DOUBLE) * {scale}) AS BIGINT) "
             f"+ {scale} END)"
         ).alias("qarr"),
+    )
+
+
+def _valid_vectors(q: DataFrame) -> DataFrame:
+    """The rows of a `_quantized` frame the kernels accept — the
+    `kernels.int_matrix` rule: non-NULL, `similarity._vec_dim` wide, no
+    NULL component. Seeds come only from these rows, so an invalid
+    vector can neither crash a fit nor set a centroid's width."""
+    dim = _vec_dim(q, "qarr") or 0
+    return q.filter(
+        F.col("qarr").isNotNull()
+        & (F.size("qarr") == dim)
+        & ~F.exists("qarr", lambda x: x.isNull())
     )
 
 
@@ -217,9 +231,12 @@ def kmeans_fit(
 ) -> list[list[int]]:
     """Run `iters` Lloyd rounds over a `_quantized` frame; return the
     final centroids (k × dim ints — the driver-sized model). The per-
-    round reduce is k × dim partial sums; the corpus never moves."""
+    round reduce is k × dim partial sums; the corpus never moves. Seeds
+    are valid vectors only (`_valid_vectors`), and an invalid row's NULL
+    cluster takes no part in an update."""
     init_rows = (
-        q.select("id", "qarr", F.md5(F.col("id").cast("string")).alias("hk"))
+        _valid_vectors(q)
+        .select("id", "qarr", F.md5(F.col("id").cast("string")).alias("hk"))
         .orderBy("hk", "id")
         .limit(k)
         .collect()
@@ -230,9 +247,8 @@ def kmeans_fit(
     for _ in range(iters):
         assigned = _assign(q, centroids)
         stats = (
-            assigned.select(
-                "cluster", F.posexplode("qarr").alias("pos", "qv")
-            )
+            assigned.filter(F.col("cluster").isNotNull())
+            .select("cluster", F.posexplode("qarr").alias("pos", "qv"))
             .groupBy("cluster", "pos")
             .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
             .collect()
@@ -291,8 +307,9 @@ def kcenter_select(
     centroids), so each round's min-distance is a pure zero-shuffle
     projection (`_assign` over the selected set) followed by one
     max-of-struct aggregate — 2 corpus scans per round, no corpus
-    shuffle anywhere, driver holds k × dim ints."""
-    q = _quantized(emb_df, id_col, vec_col, scale).persist()
+    shuffle anywhere, driver holds k × dim ints. Only valid vectors
+    (`_valid_vectors`) are seeded, scored or selected."""
+    q = _valid_vectors(_quantized(emb_df, id_col, vec_col, scale)).persist()
     seed_rows = q.orderBy("id").limit(1).collect()
     if not seed_rows:
         q.unpersist()
@@ -330,10 +347,12 @@ def kcenter_select(
 
 
 def _pq_seed_rows(q_train: DataFrame, sub_k: int) -> list:
-    """The sub_k rows with the smallest (md5(id), id) — the shared seed
-    rule `_pq_fit_joint` and the unrolled DuckDB oracle both replay."""
+    """The sub_k valid rows (`_valid_vectors`) with the smallest
+    (md5(id), id) — the shared seed rule `_pq_fit_joint` and the
+    unrolled DuckDB oracle both replay."""
     return (
-        q_train.select(
+        _valid_vectors(q_train)
+        .select(
             "id", "qarr", F.md5(F.col("id").cast("string")).alias("hk")
         )
         .orderBy("hk", "id")
@@ -374,7 +393,9 @@ def _pq_fit_joint(
         # the interpreted struct-least expressions; codes bit-identical.
         coded = _encode_codes(q_full, codebooks, sub, with_qarr=True)
         stats = (
-            coded.select(
+            # an invalid row's codes are all NULL: no update
+            coded.filter(F.col("code_0").isNotNull())
+            .select(
                 *[f"code_{s}" for s in range(m)],
                 F.posexplode("qarr").alias("pos", "qv"),
             )

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.truncate import round_truncate
+from ..plans.truncate import iterate, round_truncate
 
 
 def resolve_redirects(
@@ -66,8 +66,8 @@ def resolve_redirects(
     EXACT by summing the two walk lengths (never-finished rows double
     1→2→…→max_hops, which is why max_hops must be a power of two: the
     linear oracle counts the same walk one edge at a time and lands on
-    the identical n_hops). Per-round lineage truncation goes through
-    `round_truncate`."""
+    the identical n_hops). `plans.truncate.iterate` runs the rounds and
+    truncates each round's state."""
     rounds = max_hops.bit_length() - 1
     if max_hops < 2 or 2**rounds != max_hops:
         raise ValueError(f"max_hops must be a power of two >= 2: {max_hops}")
@@ -79,8 +79,8 @@ def resolve_redirects(
         F.lit(1).cast("long").alias("steps"),
         F.col("_s").isNull().alias("done"),
     )
-    state = round_truncate(state)
-    for _ in range(rounds):
+
+    def double(state, _):
         nxt = state.select(
             F.col("url").alias("_u2"),
             F.col("cur").alias("_c2"),
@@ -90,7 +90,7 @@ def resolve_redirects(
         # a not-done row's cur has an outgoing edge, i.e. cur IS a src,
         # so the join always matches exactly one state row; done rows
         # match nothing (their cur left the src set) and pass through
-        state = state.join(nxt, state["cur"] == nxt["_u2"], "left").select(
+        return state.join(nxt, state["cur"] == nxt["_u2"], "left").select(
             "url",
             F.when(F.col("done"), F.col("cur"))
             .otherwise(F.col("_c2"))
@@ -102,7 +102,8 @@ def resolve_redirects(
             .otherwise(F.col("_d2"))
             .alias("done"),
         )
-        state = round_truncate(state)
+
+    state = iterate(round_truncate(state), double, rounds)
     return state.select(
         "url",
         F.when(F.col("done"), F.col("cur")).alias("terminal_url"),

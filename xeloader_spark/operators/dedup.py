@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.truncate import registered_persist, round_truncate
+from ..plans.truncate import iterate, registered_persist, round_truncate
 from ..plans.truncate import release_persisted  # noqa: F401  (re-export)
 from .kernels import local_frame, quantize_sql
 from .minhash import agreement, band_keys, signatures
@@ -691,12 +691,13 @@ def _cc_star(pairs_uv: DataFrame, max_iter: int) -> DataFrame:
     an edge.
     """
 
-    E = (
+    E0 = (
         pairs_uv.filter(F.col("u") != F.col("v"))
         .distinct()
         .transform(round_truncate)
     )
-    for _ in range(max_iter):
+
+    def contract(E, _):
         und = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (
             und.groupBy("u")
@@ -715,17 +716,17 @@ def _cc_star(pairs_uv: DataFrame, max_iter: int) -> DataFrame:
         # neighbor (and u itself) re-attaches to u's minimum
         mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
         attached = large.join(mins2, "u")
-        new_e = (
+        return (
             attached.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .union(mins2.select("u", F.col("m").alias("v")))
             .distinct()
-            .transform(round_truncate)
         )
-        stable = new_e.count() == E.count() and new_e.exceptAll(E).isEmpty()
-        E = new_e
-        if stable:
-            break
+
+    def stable(E, new_e):
+        return new_e.count() == E.count() and new_e.exceptAll(E).isEmpty()
+
+    E = iterate(E0, contract, max_iter, until=stable)
     return (
         E.select(F.col("u").alias("node"), F.col("v").alias("cluster"))
         .union(E.select(F.col("v").alias("node"), F.col("v").alias("cluster")))
@@ -760,8 +761,8 @@ def connected_components(
     safe on a busy shared production driver, not just a quiet sandbox
     (a 4M-edge collect measured multi-GB). Past the threshold the
     large-star/small-star contraction (`_cc_star`) runs: O(log n) rounds
-    on any topology, the 100 TB-safe choice, its edge frame truncated
-    per round by `round_truncate`. Union-find is the reference the star
+    on any topology, the 100 TB-safe choice, its rounds run by
+    `plans.truncate.iterate`. Union-find is the reference the star
     path is equivalence-tested against.
     """
 

@@ -22,12 +22,21 @@ O(outdeg) micro-units of mass per node per round — quantization noise
 
 from __future__ import annotations
 
-from functools import partial
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.truncate import registered_local_checkpoint, round_truncate
+from ..plans.truncate import iterate, registered_local_checkpoint, round_truncate
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """The distinct endpoints of an (src, dst) edge frame as `id`,
+    truncated: the node set every centrality round joins against."""
+    return (
+        e.select(F.col("src").alias("id"))
+        .unionAll(e.select(F.col("dst").alias("id")))
+        .distinct()
+        .transform(round_truncate)
+    )
 
 
 def pagerank(
@@ -59,28 +68,21 @@ def pagerank(
     count scalar), never rows.
     """
 
-    ck = partial(round_truncate, eager=False)
     # materialize the edge list ONCE — nodes, outdegrees, and every
     # iteration all derive from this checkpoint, so an expensive edge
     # producer (e.g. the banded-LSH k-NN self-join) runs a single time
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).transform(ck)
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .transform(ck)
-    )
+    ).transform(round_truncate)
+    nodes = _nodes(e)
     n = nodes.count()
     init = scale // n
     base = ((damp_den - damp_num) * init) // damp_den
 
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = e.join(outdeg, "src").transform(ck)
+    ew = e.join(outdeg, "src").transform(round_truncate)
 
-    ranks = nodes.select("id", F.lit(init).cast("long").alias("rank"))
-    for _ in range(iters):
+    def step(ranks, _):
         contribs = (
             ew.join(ranks, ew.src == ranks.id)
             .select(
@@ -90,19 +92,17 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
-            nodes.join(contribs, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(
-                        f"({damp_num} * coalesce(s, 0L)) div {damp_den}"
-                    )
-                ).alias("rank"),
-            )
-            .transform(ck)
+        return nodes.join(contribs, "id", "left").select(
+            "id",
+            (
+                F.lit(base).cast("long")
+                + F.expr(f"({damp_num} * coalesce(s, 0L)) div {damp_den}")
+            ).alias("rank"),
         )
+
+    ranks = iterate(
+        nodes.select("id", F.lit(init).cast("long").alias("rank")), step, iters
+    )
     return ranks.select(
         "id",
         F.col("rank").alias("rank_micro"),
@@ -141,54 +141,46 @@ def hits(
 
     Scale shape: edges shuffle once up front (distinct), then each
     round is two edge-sized joins + two node-sized aggregates + two
-    1-row totals broadcast back — the node frames truncate per round
-    through `round_truncate`."""
+    1-row totals broadcast back — `plans.truncate.iterate` runs the two
+    half-rounds and truncates each new node frame."""
 
     if iters < 1:
         raise ValueError("hits: iters must be >= 1")
 
-    ck = partial(round_truncate, eager=False)
-
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
-        .transform(ck)
+        .transform(round_truncate)
     )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .transform(ck)
-    )
+    nodes = _nodes(e)
     norm = (
         f"coalesce(raw, 0L) div greatest(coalesce(t, 0L) div {scale}L, 1L)"
     )
-    h = nodes.select("id", F.lit(scale).cast("long").alias("h"))
-    for _ in range(iters):
-        araw = (
-            e.join(h.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("h").cast("long").alias("raw"))
+
+    def normalized(state: DataFrame, score: str, frm: str, to: str, out: str):
+        # one half-round: every edge carries the `score` of its `frm` end
+        # to its `to` end; the sums are L1-normalized over every node
+        raw = (
+            e.join(state.withColumnRenamed("id", frm), frm)
+            .groupBy(F.col(to).alias("id"))
+            .agg(F.sum(score).cast("long").alias("raw"))
         )
-        ta = araw.agg(F.sum("raw").cast("long").alias("t"))
-        a = (
-            nodes.join(araw, "id", "left")
-            .crossJoin(F.broadcast(ta))
-            .select("id", F.expr(norm).alias("a"))
-            .transform(ck)
+        total = raw.agg(F.sum("raw").cast("long").alias("t"))
+        return (
+            nodes.join(raw, "id", "left")
+            .crossJoin(F.broadcast(total))
+            .select("id", F.expr(norm).alias(out))
         )
-        hraw = (
-            e.join(a.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("a").cast("long").alias("raw"))
-        )
-        th = hraw.agg(F.sum("raw").cast("long").alias("t"))
-        h = (
-            nodes.join(hraw, "id", "left")
-            .crossJoin(F.broadcast(th))
-            .select("id", F.expr(norm).alias("h"))
-            .transform(ck)
-        )
+
+    def authorities(ah, _):
+        return normalized(ah[1], "h", "src", "dst", "a"), ah[1]
+
+    def hubs(ah, _):
+        return ah[0], normalized(ah[0], "a", "dst", "src", "h")
+
+    # state (a, h); `a` has no value before the first round
+    h0 = nodes.select("id", F.lit(scale).cast("long").alias("h"))
+    a, h = iterate((None, h0), (authorities, hubs), iters)
     return (
         nodes.join(h.withColumnRenamed("h", "hub_scaled"), "id")
         .join(a.withColumnRenamed("a", "auth_scaled"), "id")
@@ -348,12 +340,13 @@ def label_propagation(
     localCheckpoint-ed per round so plans stay O(1) in iters.
     """
 
-    ck = partial(round_truncate, eager=False)
     labels = seeds.select(
         "id", "label", F.lit(0).cast("long").alias("round_assigned")
-    ).transform(ck)
-    e = edges.select("src", "dst").transform(ck)
-    for r in range(1, iters + 1):
+    ).transform(round_truncate)
+    e = edges.select("src", "dst").transform(round_truncate)
+    w = Window.partitionBy("id").orderBy(F.desc("n"), F.asc("label"))
+
+    def step(labels, r):
         votes = (
             e.join(labels.select(F.col("id").alias("dst"), "label"), "dst")
             .join(
@@ -364,9 +357,6 @@ def label_propagation(
             .groupBy(F.col("src").alias("id"), "label")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("id").orderBy(F.desc("n"), F.asc("label"))
         picked = (
             votes.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
@@ -374,8 +364,9 @@ def label_propagation(
                 "id", "label", F.lit(r).cast("long").alias("round_assigned")
             )
         )
-        labels = labels.unionByName(picked).transform(ck)
-    return labels
+        return labels.unionByName(picked)
+
+    return iterate(labels, step, iters)
 
 
 def pagerank_weighted(
@@ -412,7 +403,6 @@ def pagerank_weighted(
     quantization noise, never sign-relevant.
     """
 
-    ck = partial(round_truncate, eager=False)
     # materialize the edge list ONCE (same discipline as `pagerank` and
     # `hits`; r13): without this checkpoint the node-set action and the
     # weight-normalization action each re-derived the edge PRODUCER —
@@ -422,7 +412,7 @@ def pagerank_weighted(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("long").alias("w"),
-    ).filter(F.col("w") > 0).transform(ck)
+    ).filter(F.col("w") > 0).transform(round_truncate)
     # teleport seeds are UNIONED into the node set: a seed with no edges
     # is a dangling node that still receives its share of the (1−d)
     # restart mass every round (rather than silently vanishing while
@@ -437,7 +427,7 @@ def pagerank_weighted(
     )
     if seed_ids is not None:
         nodes = nodes.unionAll(seed_ids)
-    nodes = nodes.distinct().transform(ck)
+    nodes = nodes.distinct().transform(round_truncate)
     n = nodes.count()
     init = scale // n
 
@@ -449,7 +439,7 @@ def pagerank_weighted(
             "dst",
             F.expr(f"(w * {wscale}) div outw").cast("long").alias("wn"),
         )
-        .transform(ck)
+        .transform(round_truncate)
     )
 
     if seed_ids is None:
@@ -465,11 +455,10 @@ def pagerank_weighted(
         seed_base = ((damp_den - damp_num) * scale) // (damp_den * n_seeds)
         seeds = seeds.withColumn(
             "base", F.lit(seed_base).cast("long")
-        ).transform(ck)
+        ).transform(round_truncate)
         base_col = F.coalesce(F.col("base"), F.lit(0)).cast("long")
 
-    ranks = nodes.select("id", F.lit(init).cast("long").alias("rank"))
-    for _ in range(iters):
+    def step(ranks, _):
         contribs = (
             ew.join(ranks, ew.src == ranks.id)
             .select(
@@ -482,13 +471,17 @@ def pagerank_weighted(
         joined = nodes.join(contribs, "id", "left")
         if seeds is not None:
             joined = joined.join(seeds, "id", "left")
-        ranks = joined.select(
+        return joined.select(
             "id",
             (
                 base_col
                 + F.expr(f"({damp_num} * coalesce(s, 0L)) div {damp_den}")
             ).alias("rank"),
-        ).transform(ck)
+        )
+
+    ranks = iterate(
+        nodes.select("id", F.lit(init).cast("long").alias("rank")), step, iters
+    )
     return ranks.select(
         "id",
         F.col("rank").alias("rank_micro"),
@@ -520,7 +513,6 @@ def kcore(
     node ids never enter the loop.
     """
 
-    ck = partial(round_truncate, eager=False)
     # symmetrize in ONE pass over `edges` (explode both orientations per
     # row) instead of union(edges, reverse(edges)) — the union form
     # consumed the edge producer twice, re-running an expensive upstream
@@ -539,21 +531,24 @@ def kcore(
         .select("_e.src", "_e.dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(ck)
+        .transform(round_truncate)
     )
-    all_nodes = und.select(F.col("src").alias("id")).distinct().transform(ck)
-    e = und
-    for _ in range(rounds):
+    all_nodes = (
+        und.select(F.col("src").alias("id")).distinct().transform(round_truncate)
+    )
+
+    def peel(e, _):
         deg = e.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).cast("long").alias("degree")
         )
         keep = deg.filter(F.col("degree") >= k).select("id")
-        e = (
+        return (
             e.join(keep.select(F.col("id").alias("src")), "src")
             .join(keep.select(F.col("id").alias("dst")), "dst")
             .select("src", "dst")
-            .transform(ck)
         )
+
+    e = iterate(und, peel, rounds)
     final_deg = e.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -685,35 +680,27 @@ def harmonic_centrality(
     state), parity-bounded against this operator in pytest.
     """
 
-    ck = partial(round_truncate, eager=False)
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
-        .transform(ck)
+        .transform(round_truncate)
     )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .transform(ck)
-    )
-    d = nodes.select(
+    d0 = _nodes(e).select(
         F.col("id").alias("psrc"),
         F.col("id").alias("pdst"),
         F.lit(0).cast("long").alias("d"),
     )
-    for t in range(rounds):
+
+    def hop(d, r):
+        # grow the frontier (pairs settled in round r - 1) by one edge
         grown = (
-            d.filter(F.col("d") == t)
+            d.filter(F.col("d") == r - 1)
             .join(e, F.col("pdst") == F.col("src"))
             .select("psrc", F.col("dst").alias("pdst"), (F.col("d") + 1).alias("d"))
         )
-        d = (
-            d.unionAll(grown)
-            .groupBy("psrc", "pdst")
-            .agg(F.min("d").alias("d"))
-            .transform(ck)
-        )
+        return d.unionAll(grown).groupBy("psrc", "pdst").agg(F.min("d").alias("d"))
+
+    d = iterate(d0, hop, rounds)
     return d.groupBy(F.col("pdst").alias("id")).agg(
         F.expr(
             f"CAST(sum(CASE WHEN d > 0 THEN {scale} DIV d ELSE 0L END)"
@@ -752,29 +739,28 @@ def hyperball_harmonic(
     Returns (id, harmonic_est double, ball_final double).
     """
 
-    ck = partial(round_truncate, eager=False)
     from .sketch import _hll_reg_cols, hll_estimate
 
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
-        .transform(ck)
+        .transform(round_truncate)
     )
     nodes = (
         e.select(F.col("src").alias("id"))
         .unionAll(e.select(F.col("dst").alias("id")))
         .distinct()
         .select(F.col("id").cast("string").alias("id"))
-        .transform(ck)
+        .transform(round_truncate)
     )
     es = e.select(
         F.col("src").cast("string").alias("src"),
         F.col("dst").cast("string").alias("dst"),
-    ).transform(ck)
+    ).transform(round_truncate)
     idx, rho = _hll_reg_cols("id", p, salt)
     regs = nodes.select(
         F.col("id").alias("grp"), idx.alias("idx"), rho.alias("rho")
-    ).transform(ck)
+    ).transform(round_truncate)
 
     m = 1 << p
 
@@ -799,28 +785,29 @@ def hyperball_harmonic(
     acc = est(regs).select("id", F.col("b").alias("prev_b")).withColumn(
         "h", F.lit(0.0)
     )
-    for t in range(1, rounds + 1):
+
+    def merge(state, _):
+        # every node's counter merges into its out-neighbors'
+        regs, acc = state
         prop = regs.join(es, regs.grp == es.src).select(
             F.col("dst").alias("grp"), "idx", "rho"
         )
-        regs = (
-            regs.unionAll(prop)
-            .groupBy("grp", "idx")
-            .agg(F.max("rho").alias("rho"))
-            .transform(ck)
+        merged = (
+            regs.unionAll(prop).groupBy("grp", "idx").agg(F.max("rho").alias("rho"))
         )
-        acc = (
-            acc.join(est(regs), "id")
-            .select(
-                "id",
-                F.col("b").alias("prev_b"),
-                (
-                    F.col("h")
-                    + F.expr(f"greatest(b - prev_b, 0D) / {float(t)}")
-                ).alias("h"),
-            )
-            .transform(ck)
+        return merged, acc
+
+    def accumulate(state, t):
+        regs, acc = state
+        return regs, acc.join(est(regs), "id").select(
+            "id",
+            F.col("b").alias("prev_b"),
+            (
+                F.col("h") + F.expr(f"greatest(b - prev_b, 0D) / {float(t)}")
+            ).alias("h"),
         )
+
+    _, acc = iterate((regs, acc), (merge, accumulate), rounds)
     return acc.select(
         "id",
         F.col("h").alias("harmonic_est"),

@@ -30,6 +30,9 @@ def frequent_pairs(
       arrays (collect_set dedups in the aggregate itself) and is eagerly
       checkpointed, so basket total, item supports, and the pair carve
       all read the materialized basket frame — no re-scan per consumer.
+      It is the one EAGER `round_truncate` caller: the three consumers
+      are branches of a single job, and a lazy checkpoint measured
+      slower there.
     - the a-priori prune runs BEFORE any pair is formed: items below
       `min_item_support` can't be in a frequent pair (pair support ≤ item
       support), so the item-support aggregate (item-dimension sized)
@@ -67,7 +70,8 @@ def frequent_pairs(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
         )
         .groupBy("basket")
-        .agg(F.array_sort(F.collect_set("item")).alias("all_items"))
+        .agg(F.array_sort(F.collect_set("item")).alias("all_items")),
+        eager=True,
     )
     item_sup = (
         baskets0.select(F.explode("all_items").alias("item"))

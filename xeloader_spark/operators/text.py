@@ -1280,6 +1280,8 @@ BPE_L = "\x02"
 BPE_R = "\x03"
 BPE_PK = "\x1e"
 _BPE_CTRL = "[\x02\x03\x1e]"
+# merge rounds between two truncations of the segmentation frame
+_BPE_TRUNCATE_EVERY = 16
 
 
 def _sql_str(s: str) -> str:
@@ -1293,7 +1295,6 @@ def bpe_train(
     df: DataFrame,
     iters: int = 5,
     text_col: str = "text",
-    checkpoint_every: int = 16,
 ) -> DataFrame:
     """Iterative BPE merge training (Sennrich et al. 2016, the public
     algorithm): `iters` rounds of count-adjacent-pairs → merge the most
@@ -1312,9 +1313,10 @@ def bpe_train(
     by pair key ascending, so the rule sequence is engine-deterministic.
 
     Plan growth is bounded: each merge appends one replace projection to
-    `segs`, so every `checkpoint_every` rounds the frame is truncated
+    `segs`, so every `_BPE_TRUNCATE_EVERY` rounds the frame is truncated
     via ``plans.truncate.round_truncate``, materializing the vocab-sized
-    working set. A realistic tokenizer train (10³–10⁴ merges) therefore
+    working set. The loop stays outside ``plans.truncate.iterate``: each
+    round collects its merge rule on the driver and may stop early. A realistic tokenizer train (10³–10⁴ merges) therefore
     keeps both the logical plan and the driver round-trip O(k) per
     action instead of O(total merges).
     """
@@ -1372,7 +1374,7 @@ def bpe_train(
                 F.lit(f"{BPE_L}{left}{right}{BPE_R}"),
             ),
         )
-        if checkpoint_every and rnd % checkpoint_every == 0:
+        if rnd % _BPE_TRUNCATE_EVERY == 0:
             # per-round loop truncation; the registry frees the local
             # blocks at release_persisted()
             segs = round_truncate(segs)
